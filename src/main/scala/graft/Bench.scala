@@ -566,6 +566,7 @@ object Bench {
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
     case class Timing(name: String, passesSec: Seq[Double], gcMs: Seq[Long]) {
+      def failed: Boolean = passesSec.exists(_.isNaN)
       def best: Double = passesSec.min
     }
     val timedQueries = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -615,8 +616,11 @@ object Bench {
       timedQueries.map { case (name, fn) =>
         val gc0 = gcMillis()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (((System.nanoTime() - t0) / 1e9, gcMillis() - gc0))
+        // a thrown query is NaN, never a (fast) time of its exception path
+        val sec =
+          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          catch { case _: Throwable => Double.NaN }
+        name -> ((sec, gcMillis() - gc0))
       }.toMap
     // Kernel samples bracket every measurement block, so each query pass
     // and each throughput pass sits between two contention readings.
@@ -693,7 +697,10 @@ object Bench {
       val samples = sweeps.map(_(name))
       Timing(name, samples.map(_._1), samples.map(_._2))
     }
-    val results = timings.map(t => t.name -> t.best)
+    // a query that failed in any sweep is listed as failed and left out
+    // of `value`
+    val failed = timings.filter(_.failed).map(_.name)
+    val results = timings.filterNot(_.failed).map(t => t.name -> t.best)
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val passes = tputPassList.toSeq
     val corpusBytes = tputCorpus.map(_._2).getOrElse(0L)
@@ -733,8 +740,10 @@ object Bench {
       val qs = entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
         .mkString("{", ",", "}")
       val cidx = contentionIdx.map(v => f"$v%.2f").mkString("[", ",", "]")
+      val failedList = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       f"""{"metric":"total","value":$total%.3f,"unit":"sec",""" +
         f""""total_floor_normalized":$totalNorm%.3f,"queries":$qs,""" +
+        f""""failed":$failedList,"failed_count":${failed.size},""" +
         f""""sessionize_mbps":$tputMbps%.1f,"sessionize_idx":$tputIdx%.2f,""" +
         f""""sessionize_mbps_quiet":$tputMbpsQuiet%.1f,""" +
         f""""sessionize_sessions":$tputSessions,""" +
@@ -762,7 +771,8 @@ object Bench {
       def arr[T](xs: Seq[T], fmt: T => String): String =
         xs.map(fmt).mkString("[", ",", "]")
       val detail = timings.map { t =>
-        "\"" + t.name + "\":{\"sec\":" + arr[Double](t.passesSec, v => f"$v%.3f") +
+        "\"" + t.name + "\":{\"sec\":" +
+          arr[Double](t.passesSec, v => if (v.isNaN) "null" else f"$v%.3f") +
           ",\"gc_ms\":" + arr[Long](t.gcMs, _.toString) + "}"
       }.mkString("{", ",", "}")
       val kRaw = arr[Double](kernels, v => f"$v%.4f")

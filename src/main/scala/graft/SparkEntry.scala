@@ -682,7 +682,8 @@ object SparkEntry {
     "d1_dedup_exact" -> ((s, dir) =>
       Dedup.exact(docs(s, dir), col("text"), col("doc_id"))),
     "d2_dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashCandidates(docs(s, dir), col("text"), col("doc_id"))),
+      Dedup.minhashCandidates(docs(s, dir), col("text"), col("doc_id"))
+        .orderBy("doc_a", "doc_b")),
     "d3_dedup_simhash" -> ((s, dir) =>
       Dedup.simhash(docs(s, dir), col("text"), col("doc_id"))),
     "d4_ngram_jaccard" -> ((s, dir) =>
@@ -695,8 +696,8 @@ object SparkEntry {
     // dup chain, transitive closure the pair list alone can't express)
     "d6_dedup_groups" -> ((s, dir) =>
       Dedup.resolveGroups(
-        Dedup.minhashCandidates(docs(s, dir), col("text"), col("doc_id"),
-          ordered = false))),
+        Dedup.minhashCandidates(docs(s, dir), col("text"), col("doc_id")))
+        .orderBy("doc_id")),
     // D7: SemDeDup — near-dups within embedding-space centroid cells
     "d7_semantic_dedup" -> ((s, dir) =>
       Dedup.semanticNearDup(emb(s, dir), col("embedding"), col("vec_id"),
@@ -756,8 +757,7 @@ object SparkEntry {
     "d18_dedup_stats" -> ((s, dir) => {
       val d = docs(s, dir)
       Dedup.resolveGroups(
-        Dedup.minhashCandidates(d, col("text"), col("doc_id"), star = true,
-          ordered = false), ordered = false)
+        Dedup.minhashCandidates(d, col("text"), col("doc_id"), star = true))
         .groupBy("group_id").agg(count(lit(1)).as("group_size"))
         .groupBy("group_size").agg(count(lit(1)).as("n_groups"))
         .orderBy("group_size")
@@ -772,8 +772,7 @@ object SparkEntry {
       // star = true: one edge per (bucket, doc) instead of all in-bucket
       // pairs — identical connected components, no hot-bucket blow-up
       val groups = Dedup.resolveGroups(
-        Dedup.minhashCandidates(d, col("text"), col("doc_id"), star = true,
-          ordered = false), ordered = false)
+        Dedup.minhashCandidates(d, col("text"), col("doc_id"), star = true))
       d.join(groups, Seq("doc_id"), "left")
         .filter(col("group_id").isNull || col("group_id") === col("doc_id"))
         .select("doc_id").orderBy("doc_id")
@@ -796,17 +795,19 @@ object SparkEntry {
     "s1_ann_bruteforce" -> ((s, dir) => {
       val e = emb(s, dir)
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 5),
-        "embedding", "vec_id", k = 3)
+        "embedding", "vec_id", k = 3).orderBy("query_id", "rk")
     }),
     "s3_ann_ivf" -> ((s, dir) => {
       val e = emb(s, dir)
       Similarity.ivfTopK(e, e.filter(col("vec_id") >= 5 && col("vec_id") < 10),
         "embedding", "vec_id", k = 3, nCells = 8, nProbe = 2)
+        .orderBy("query_id", "rk")
     }),
     "s2_ann_lsh" -> ((s, dir) => {
       val e = emb(s, dir)
       Similarity.lshTopK(e, e.filter(col("vec_id") < 5),
         "embedding", "vec_id", k = 3, planes = 8, dim = 64)
+        .orderBy("query_id", "rk")
     }),
     // S8: recall@k of the LSH index against exact brute force — the
     // quality gate run before an approximate index goes live
@@ -825,6 +826,7 @@ object SparkEntry {
       Similarity.ivfTopK(e, e.filter(col("vec_id") >= 5 && col("vec_id") < 10),
         "embedding", "vec_id", k = 3, nCells = 4, nProbe = 2,
         centroids = Some(cb))
+        .orderBy("query_id", "rk")
     }),
 
     // S6: IVFADC-style product quantization — per-subspace trained
@@ -989,8 +991,7 @@ object SparkEntry {
     "p5_leakage_split" -> ((s, dir) => {
       val d = docs(s, dir)
       val groups = Dedup.resolveGroups(
-        Dedup.minhashCandidates(d, col("text"), col("doc_id"), star = true,
-          ordered = false), ordered = false)
+        Dedup.minhashCandidates(d, col("text"), col("doc_id"), star = true))
       Pack.leakageSafeSplit(d, col("doc_id"), groups, validPermille = 100)
     }),
     // P6: DSIR importance scoring — target slice = English docs; top 200
@@ -1002,8 +1003,7 @@ object SparkEntry {
     // P8: CCNet head/middle/tail buckets of the t11 LM score, per language
     "p8_ppl_buckets" -> ((s, dir) => {
       val d = docs(s, dir)
-      val lm = TextOps.bigramLikelihood(d, col("text"), col("doc_id"),
-        ordered = false)
+      val lm = TextOps.bigramLikelihood(d, col("text"), col("doc_id"))
       TextOps.scoreBuckets(
         lm.join(d.select(col("doc_id"), col("lang")), Seq("doc_id")),
         col("lang"), col("lm_score"), col("doc_id"))
@@ -1012,8 +1012,7 @@ object SparkEntry {
     // global budget is spent; exact distributed prefix sum)
     "p9_token_budget" -> ((s, dir) => {
       val d = docs(s, dir)
-      val lm = TextOps.bigramLikelihood(d, col("text"), col("doc_id"),
-        ordered = false)
+      val lm = TextOps.bigramLikelihood(d, col("text"), col("doc_id"))
       // toks = n_bigrams + 1 exactly: the fused kernel emits one row per
       // adjacent token pair and the c2/c1 joins drop nothing (both count
       // frames derive from the same occurrences), so the former second
@@ -1054,7 +1053,8 @@ object SparkEntry {
     }),
     // T11: corpus-trained bigram LM quality score (integer ppm mean)
     "t11_lm_score" -> ((s, dir) =>
-      TextOps.bigramLikelihood(docs(s, dir), col("text"), col("doc_id"))),
+      TextOps.bigramLikelihood(docs(s, dir), col("text"), col("doc_id"))
+        .orderBy("doc_id")),
     // T23: Kneser-Ney smoothed bigram LM (proper discount +
     // continuation probability, exact integer ppm)
     "t23_kn_score" -> ((s, dir) =>
@@ -1087,6 +1087,7 @@ object SparkEntry {
           substring(col("text"), 1, 60).as("qt"))
       TextOps.bm25TopK(d, col("text"), col("doc_id"),
         q, col("qt"), col("qid"), k = 5)
+        .orderBy("query_id", "rk")
     }),
     // S10: hybrid retrieval — BM25 (sparse, over documents.text) and
     // exact cosine (dense, over the aligned embeddings table) fused by
@@ -1097,12 +1098,11 @@ object SparkEntry {
         .select(col("doc_id").as("qid"),
           substring(col("text"), 1, 60).as("qt"))
       val sparse = TextOps.bm25TopK(d, col("text"), col("doc_id"),
-        q, col("qt"), col("qid"), k = 20, ordered = false)
+        q, col("qt"), col("qid"), k = 20)
         .select(col("query_id"), col("doc_id"), col("rk"))
       val e = emb(s, dir)
       val dense = Similarity.bruteForceTopK(e,
-        e.filter(col("vec_id") % 100 === 0), "embedding", "vec_id", k = 20,
-        ordered = false)
+        e.filter(col("vec_id") % 100 === 0), "embedding", "vec_id", k = 20)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           col("rk").cast("long").as("rk"))
       Similarity.rrfFuse(Seq(sparse, dense), kRrf = 60, topK = 10)

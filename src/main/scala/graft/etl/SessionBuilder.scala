@@ -1702,10 +1702,16 @@ object SessionBuilder {
     sessionize(spark, pcapPath, node, testRules = true,
       yaraRules = refYaraRules)
 
-  private lazy val refYaraRules: Seq[graft.ops.Yara.Rule] =
+  /** Fails loudly: an unreadable or unparsable rules file must not
+    * become "no rules", which would silently tag nothing.
+    */
+  private lazy val refYaraRules: Seq[graft.ops.Yara.Rule] = {
+    val path = "/root/reference/tests/rules.yara"
     try graft.ops.Yara.parse(new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/tests/rules.yara")),
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
       java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Exception => Nil }
+    catch { case e: Exception =>
+      throw new IllegalStateException(
+        s"cannot load the reference YARA rules from $path", e) }
+  }
 }

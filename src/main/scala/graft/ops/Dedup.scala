@@ -105,7 +105,7 @@ object Dedup {
   def minhashCandidates(
       df: DataFrame, text: Column, idCol: Column,
       shingleK: Int = 3, bands: Int = 4, rowsPerBand: Int = 3,
-      star: Boolean = false, ordered: Boolean = true): DataFrame = {
+      star: Boolean = false): DataFrame = {
     val b = minhashBands(df, text, idCol, shingleK, bands, rowsPerBand)
     val buckets = b.groupBy("band_id", "band_key")
       .agg(collect_list(col("doc_id")).as("docs"))
@@ -117,12 +117,8 @@ object Dedup {
       else
         buckets.select(explode(col("docs")).as("doc_a"), col("docs"))
           .select(col("doc_a"), explode(col("docs")).as("doc_b"))
-    val dd = pairs.filter(col("doc_a") < col("doc_b"))
+    pairs.filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-    // `ordered = false` for consumers that immediately re-shuffle the
-    // pairs (resolveGroups): a global sort is a sampling pass plus a
-    // range exchange that the next operator throws away
-    if (ordered) dd.orderBy("doc_a", "doc_b") else dd
   }
 
   /** Persist the corpus's LSH band rows as a bucketed catalog table —
@@ -215,6 +211,10 @@ object Dedup {
     val dups = incrementalCandidates(batch, text, idCol, table,
       shingleK, bands, rowsPerBand)
       .select(col("doc_b").as("_dup_id")).distinct()
+      // localCheckpoint, not the lineage-keeping CacheHooks.materialize:
+      // severing lineage is the point here. The append below changes the
+      // index these candidates were matched against, so a recompute from
+      // lineage would read an index that already holds this batch's rows
       .localCheckpoint()
     appendBandIndex(batch, text, idCol, table, shingleK, bands, rowsPerBand)
     batch.join(dups, idCol === col("_dup_id"), "left_anti")
@@ -347,78 +347,77 @@ object Dedup {
     * (stars/chains of a handful of docs), so 3-5 rounds close 100 TB runs.
     * Each round is one shuffle of (node, label) pairs, never edges², and
     * the edge list is cached once. The loop stops early at a fixpoint,
-    * read from an observed metric on the round's own checkpoint job
+    * read from an observed metric on the round's own materializing job
     * (the driver-side analogue of Pregel's "no messages" halt, at zero
-    * extra jobs per round).
+    * extra jobs per round). The metric rides the async listener bus, so
+    * its wait is bounded by [[observedMetricWait]]; a metric that does
+    * not arrive in time is replaced by a synchronous count of the
+    * changed labels over the two materialized rounds.
     */
   def resolveGroups(
       pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
-      maxRounds: Int = 20, ordered: Boolean = true): DataFrame = {
+      maxRounds: Int = 20): DataFrame = {
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .cache()
-    // localCheckpoint (not cache): materializes AND truncates lineage, so
-    // the logical plan stays constant-depth across rounds — with plain
-    // cache the plan nests once per iteration and analysis/recovery cost
-    // grows without bound at cluster scale (the GraphFrames CC pattern).
-    // The init checkpoint is load-bearing: round 0 references the labels
+    lastResolveFallbacks = 0
+    // every round is materialized: the next round references the labels
     // through two differently-keyed joins, which ReuseExchange cannot
-    // share (measured: skipping it re-ran the aggregate twice, tasks
-    // 129 -> 221 on p5).
-    var ckpt = edges.groupBy(col("src").as("id"))
-      .agg(least(min(col("dst")), first(col("src"))).as("label"))
-      .localCheckpoint()
-    var labels = ckpt
+    // share (measured: leaving the init frame lazy re-ran the aggregate
+    // twice, tasks 129 -> 221 on p5). The next round reads a cached
+    // round through `leaf`, a plan leaf over its cached rows: nested
+    // plans would double per round (two references each), and plan
+    // strings and cache lookups would grow 2^rounds. The RDD lineage
+    // stays whole, so a lost block still recomputes.
+    def leaf(df: DataFrame): DataFrame =
+      df.sparkSession.createDataFrame(df.rdd, df.schema)
+    var labels = CacheHooks.materialize(edges.groupBy(col("src").as("id"))
+      .agg(least(min(col("dst")), first(col("src"))).as("label")))
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
+      val cur = leaf(labels)
       // neighborhood min: each node's label offered to every neighbor
-      val offered = edges.join(labels, col("dst") === col("id"))
+      val offered = edges.join(cur, col("dst") === col("id"))
         .groupBy(col("src").as("id")).agg(min(col("label")).as("nmin"))
-      // convergence detection rides the checkpoint job as an observed
-      // metric (CollectMetrics evaluates during materialization), so
-      // the previous per-round `isEmpty` action — up to four take-ramp
-      // jobs over an all-partitions-empty frame on the converged round
-      // — is gone: one job per propagation round. The `old` column is
+      // convergence detection rides the materializing job as an
+      // observed metric (CollectMetrics evaluates while the cache
+      // builds): one job per propagation round. The `old` column is
       // consumed by the metric below the final projection and never
-      // reaches the checkpointed rows.
+      // reaches the cached rows.
       val obs = org.apache.spark.sql.Observation()
-      val stepped = labels.join(offered, Seq("id"), "left")
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        .observe(obs, count(when(col("label") < col("old"), 1)).as("changed"))
-        .select(col("id"), col("label"))
-        .localCheckpoint()
+      val stepped = CacheHooks.materialize(
+        cur.join(offered, Seq("id"), "left")
+          .select(col("id"), col("label").as("old"),
+            least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
+          .observe(obs, count(when(col("label") < col("old"), 1)).as("changed"))
+          .select(col("id"), col("label")))
       // a propagation fixed point IS full convergence (labels are
       // monotone non-increasing; unchanged everywhere ⇒ every node
       // already holds its neighborhood min), so check BEFORE jumping —
       // the final round never pays the jump join
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      converged = changedLabels(obs, stepped, labels) == 0L
+      labels.unpersist()
       if (converged || round == 0) {
         // round 0 also skips the jump: star-shaped candidate graphs
         // (minhash/dhash hub expansion) converge in 1-2 propagation
         // rounds and should never pay it; deep chains start jumping
         // from round 1 and still close in O(log diameter) rounds
-        ckpt.unpersist()
-        ckpt = stepped
         labels = stepped
       } else {
         // pointer-jumping shortcut: each node adopts its label's label
         // (labels only decrease, and every label is itself a node id) —
         // this multiplies the propagation distance per round, turning
         // O(diameter) convergence into O(log diameter)
-        val lab2 = stepped.select(col("id").as("_jid"),
-          col("label").as("_jlabel"))
-        val next = stepped.join(lab2, stepped("label") === lab2("_jid"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("_jlabel"), col("label")))
-              .as("label"))
-          .localCheckpoint()
-        ckpt.unpersist()
+        val st = leaf(stepped)
+        val lab2 = st.select(col("id").as("_jid"), col("label").as("_jlabel"))
+        labels = CacheHooks.materialize(
+          st.join(lab2, st("label") === lab2("_jid"), "left")
+            .select(col("id"),
+              least(col("label"), coalesce(col("_jlabel"), col("label")))
+                .as("label")))
         stepped.unpersist()
-        ckpt = next
-        labels = next
       }
       round += 1
     }
@@ -429,12 +428,40 @@ object Dedup {
     require(converged,
       s"resolveGroups did not converge within $maxRounds rounds")
     lastResolveRounds = round
-    val out = labels.select(col("id").as("doc_id"), col("label").as("group_id"))
-    // `ordered = false` for consumers that re-aggregate or join the
-    // groups (d11/d18/d20/p5): the global sort they discard costs a
-    // sampling pass plus a range exchange per query
-    if (ordered) out.orderBy("doc_id") else out
+    // before the returned Dataset exists (see TextOps.bigramLikelihood)
+    CacheHooks.unpersistAfterFirstUse(labels)
+    labels.select(col("id").as("doc_id"), col("label").as("group_id"))
   }
+
+  /** Labels a propagation round lowered: the round's observed metric
+    * when it arrives within [[observedMetricWait]], else the same count
+    * taken synchronously over the two materialized rounds (each node's
+    * label before and after). Observed metrics ride the async listener
+    * bus, which drops events under load; an unbounded wait would then
+    * hang the loop.
+    */
+  private def changedLabels(obs: org.apache.spark.sql.Observation,
+      stepped: DataFrame, prev: DataFrame): Long = {
+    val metric =
+      try Some(scala.concurrent.Await.result(obs.future, observedMetricWait))
+      catch { case _: java.util.concurrent.TimeoutException => None }
+    metric.map(_.getAs[Long]("changed")).getOrElse {
+      lastResolveFallbacks += 1
+      stepped.join(prev.select(col("id"), col("label").as("old")), Seq("id"))
+        .filter(col("label") < col("old")).count()
+    }
+  }
+
+  /** How long [[resolveGroups]] waits for a round's observed metric
+    * before counting the changed labels itself.
+    */
+  @volatile private[graft] var observedMetricWait: scala.concurrent.duration.Duration =
+    scala.concurrent.duration.Duration(30, "s")
+
+  /** Rounds of the most recent [[resolveGroups]] call whose convergence
+    * check fell back to the synchronous count (see [[changedLabels]]).
+    */
+  @volatile private[graft] var lastResolveFallbacks: Int = 0
 
   /** Rounds the most recent [[resolveGroups]] call took to converge —
     * observability for ScaleProbeSpec, which pins that the round count
@@ -817,19 +844,18 @@ object Dedup {
       df: DataFrame, text: Column, idCol: Column,
       shingleK: Int = 3, bands: Int = 4, rowsPerBand: Int = 3): DataFrame = {
     val nh = bands * rowsPerBand
-    // unordered: the joins below re-shuffle the pairs, and the final
-    // orderBy re-establishes the output contract
     val pairs = minhashCandidates(df, text, idCol, shingleK, bands,
-      rowsPerBand, ordered = false)
+      rowsPerBand)
     // materialized once: the signature kernel is the dominant cost and
     // feeds BOTH renamed joins below (differing projections defeat
     // ReuseExchange, so without this it runs twice)
-    val sig = minhashSignature(df, text, idCol, shingleK, nh)
-      .localCheckpoint()
+    val sig = CacheHooks.materialize(
+      minhashSignature(df, text, idCol, shingleK, nh))
     val eq = aggregate(
       zip_with(col("sig_a"), col("sig_b"),
         (x, y) => when(x === y, 1L).otherwise(0L)),
       lit(0L), (acc, v) => acc + v)
+    CacheHooks.unpersistAfterFirstUse(sig) // before the returned Dataset exists
     pairs
       .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")),
         Seq("doc_a"))
@@ -897,8 +923,7 @@ object Dedup {
     // resolveGroups consumes) without the in-bucket all-pairs expansion
     // a boilerplate hot bucket would explode under star = false
     val groups = resolveGroups(
-      minhashCandidates(df, textCol, idCol, star = true, ordered = false),
-      ordered = false)
+      minhashCandidates(df, textCol, idCol, star = true))
     val sizes = groups.groupBy(col("group_id"))
       .agg(count(lit(1)).as("_gsz"))
     val w = groups.join(sizes, Seq("group_id"))

@@ -79,10 +79,11 @@ object FilesTable {
   def files(sessions: Dataset[SessionRow], start: Int = 0,
       length: Int = 100, sortField: String = "num", desc: Boolean = false,
       filter: Option[String] = None): Page = {
-    val all = filesTable(sessions).localCheckpoint()
+    val all = CacheHooks.materialize(filesTable(sessions))
     val total = all.count()
     val filtered = filter.fold(all)(f => all.filter(col("name").contains(f)))
     val nFiltered = filter.fold(total)(_ => filtered.count())
+    CacheHooks.unpersistAfterFirstUse(all) // before the returned page exists
     val sortCol = if (filtered.columns.contains(sortField)) col(sortField)
       else col("num")
     val page = filtered

@@ -67,71 +67,72 @@ object Forward {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(dest.pcapDir))
 
-    // sever lineage: the offsets pass and the SPI rewrite both consume
-    // the same rows; compute the source read once
-    val src = sessions.localCheckpoint()
-
-    val hdr = PcapExport.header(src, keys, store)
-    val sorted = PcapExport.records(src, keys, store)
-      .orderBy("firstPacket", "sessionId", "seq")
-      .select("sessionId", "seq", "record")
-
-    // serial assembly of the destination file, tracking each record's
-    // landing offset — the receiveSession write loop
-    val offsets = scala.collection.mutable.Map[
-      String, scala.collection.mutable.ArrayBuffer[(Int, Long, Int)]]()
-    val out = new BufferedOutputStream(new FileOutputStream(destFile), 1 << 16)
-    var nRec = 0L
-    var off: Long = hdr.length.toLong
+    // the offsets pass and the SPI rewrite both consume the same rows;
+    // compute the source read once
+    val src = CacheHooks.materialize(sessions)
     try {
-      out.write(hdr)
-      sorted.toLocalIterator().forEachRemaining { r =>
-        val sid = r.getString(0)
-        val seq = r.getInt(1)
-        val rec = r.getAs[Array[Byte]](2)
-        offsets.getOrElseUpdate(sid,
-          new scala.collection.mutable.ArrayBuffer) += ((seq, off, rec.length))
-        out.write(rec)
-        off += rec.length
-        nRec += 1
-      }
-    } finally out.close()
+      val hdr = PcapExport.header(src, keys, store)
+      val sorted = PcapExport.records(src, keys, store)
+        .orderBy("firstPacket", "sessionId", "seq")
+        .select("sessionId", "seq", "record")
 
-    // rewrite each session's packet references to the destination file
-    // (receiveSession's packetPos/fileId rewrite, apiSessions.js:3220-3226)
-    val posMap: Map[String, (Seq[Long], Seq[Int])] = offsets.iterator.map {
-      case (sid, buf) =>
-        val s = buf.sortBy(_._1)
-        sid -> (s.map(_._2).toSeq, s.map(_._3).toSeq)
-    }.toMap
-    val bc = spark.sparkContext.broadcast(posMap)
-    // every forwarded row carries a per-saveId marker tag, making the
-    // SPI side replay-idempotent: re-forwarding the same saveId first
-    // purges the previous batch's rows (matched days only), exactly as
-    // the pcap file is overwritten — without it a crash-replay doubles
-    // the destination's rows
-    val marker = s"fwd:$cleanId"
-    val cleanTags = Upload.sanitizeTags(tags) :+ marker
-    val destNode = dest.node
-    val rewritten = src.map { s =>
-      val (pos, len) = bc.value.getOrElse(s.sessionId,
-        (Seq.empty[Long], Seq.empty[Int]))
-      s.copy(node = destNode,
-        fileId = if (pos.isEmpty) Nil else Seq(destFile),
-        packetPos = pos.toArray, packetLen = len.toArray,
-        packetFileIdx = new Array[Int](pos.length),
-        tags = (s.tags ++ cleanTags).distinct)
-    }
-    val destRoot = new org.apache.hadoop.fs.Path(dest.storePath)
-    if (destRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(destRoot))
-      Tagging.rewriteMatchedDays(spark, dest.storePath,
-        org.apache.spark.sql.functions.array_contains(
-          org.apache.spark.sql.functions.col("tags"), marker)) { df =>
-        df.filter(!org.apache.spark.sql.functions.array_contains(
-          org.apache.spark.sql.functions.col("tags"), marker))
+      // serial assembly of the destination file, tracking each record's
+      // landing offset — the receiveSession write loop
+      val offsets = scala.collection.mutable.Map[
+        String, scala.collection.mutable.ArrayBuffer[(Int, Long, Int)]]()
+      val out = new BufferedOutputStream(new FileOutputStream(destFile), 1 << 16)
+      var nRec = 0L
+      var off: Long = hdr.length.toLong
+      try {
+        out.write(hdr)
+        sorted.toLocalIterator().forEachRemaining { r =>
+          val sid = r.getString(0)
+          val seq = r.getInt(1)
+          val rec = r.getAs[Array[Byte]](2)
+          offsets.getOrElseUpdate(sid,
+            new scala.collection.mutable.ArrayBuffer) += ((seq, off, rec.length))
+          out.write(rec)
+          off += rec.length
+          nRec += 1
+        }
+      } finally out.close()
+
+      // rewrite each session's packet references to the destination file
+      // (receiveSession's packetPos/fileId rewrite, apiSessions.js:3220-3226)
+      val posMap: Map[String, (Seq[Long], Seq[Int])] = offsets.iterator.map {
+        case (sid, buf) =>
+          val s = buf.sortBy(_._1)
+          sid -> (s.map(_._2).toSeq, s.map(_._3).toSeq)
+      }.toMap
+      val bc = spark.sparkContext.broadcast(posMap)
+      // every forwarded row carries a per-saveId marker tag, making the
+      // SPI side replay-idempotent: re-forwarding the same saveId first
+      // purges the previous batch's rows (matched days only), exactly as
+      // the pcap file is overwritten — without it a crash-replay doubles
+      // the destination's rows
+      val marker = s"fwd:$cleanId"
+      val cleanTags = Upload.sanitizeTags(tags) :+ marker
+      val destNode = dest.node
+      val rewritten = src.map { s =>
+        val (pos, len) = bc.value.getOrElse(s.sessionId,
+          (Seq.empty[Long], Seq.empty[Int]))
+        s.copy(node = destNode,
+          fileId = if (pos.isEmpty) Nil else Seq(destFile),
+          packetPos = pos.toArray, packetLen = len.toArray,
+          packetFileIdx = new Array[Int](pos.length),
+          tags = (s.tags ++ cleanTags).distinct)
       }
-    SessionStore.append(rewritten, dest.storePath)
-    Result(src.count(), nRec, destFile)
+      val destRoot = new org.apache.hadoop.fs.Path(dest.storePath)
+      if (destRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(destRoot))
+        Tagging.rewriteMatchedDays(spark, dest.storePath,
+          org.apache.spark.sql.functions.array_contains(
+            org.apache.spark.sql.functions.col("tags"), marker)) { df =>
+          df.filter(!org.apache.spark.sql.functions.array_contains(
+            org.apache.spark.sql.functions.col("tags"), marker))
+        }
+      SessionStore.append(rewritten, dest.storePath)
+      Result(src.count(), nRec, destFile)
+    } finally src.unpersist()
   }
 }

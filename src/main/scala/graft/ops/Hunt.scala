@@ -96,7 +96,7 @@ object Hunt {
     // mapPartitions below AND the join back — without this, a HuntJob
     // batch (filter + sort + limit) re-executes per join subtree, one
     // of them repeating all the packet I/O
-    val src = sessions.localCheckpoint()
+    val src = CacheHooks.materialize(sessions)
     val matched = src.mapPartitions { rows =>
       // one open blob + parsed global header per referenced file,
       // cached for the task's lifetime, closed on task completion.
@@ -131,6 +131,7 @@ object Hunt {
         (s.sessionId, s.segmentSeq, hit)
       }
     }.toDF("sessionId", "segmentSeq", "hit")
+    CacheHooks.unpersistAfterFirstUse(src) // before the returned Dataset exists
     src.toDF().join(matched, Seq("sessionId", "segmentSeq"))
       .withColumn("huntTag", when(col("hit"), lit(cfg.tag)))
       .drop("hit")

@@ -418,17 +418,16 @@ object Multimodal {
     val sigCols = Seq("band0", "band1", "band2", "band3")
     // materialize the signature kernel once: it feeds the exact-collapse
     // join AND (via reps) the band rows and both sides of the candidate
-    // verify — without the checkpoint Spark recomputes the 72-sample
-    // hash kernel for every consumer (measured 2.4× on the m5 bench)
-    // spread before the checkpoint: a single-row-group fixture scan is
-    // one task, and checkpointing it would pin the exact-collapse join
-    // and both verify sides to one partition (see TextOps.spread)
-    val sig = TextOps.spread(dhashSignatures(df, idCol, contentCol),
-      col("doc_id")).localCheckpoint()
+    // verify — without it Spark recomputes the 72-sample hash kernel
+    // for every consumer (measured 2.4× on the m5 bench).
+    // spread before materializing: a single-row-group fixture scan is
+    // one task, and caching it would pin the exact-collapse join and
+    // both verify sides to one partition (see TextOps.spread)
+    val sig = CacheHooks.materialize(TextOps.spread(
+      dhashSignatures(df, idCol, contentCol), col("doc_id")))
     // exact-signature collapse: rep = min doc id per 64-bit signature
-    val reps = sig.groupBy(sigCols.map(col): _*)
-      .agg(min(col("doc_id")).as("rep"))
-      .localCheckpoint()
+    val reps = CacheHooks.materialize(sig.groupBy(sigCols.map(col): _*)
+      .agg(min(col("doc_id")).as("rep")))
     val exactEdges = sig.join(reps, sigCols)
       .filter(col("doc_id") =!= col("rep"))
       .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"),
@@ -474,6 +473,10 @@ object Multimodal {
           .reduce(_ + _).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
+    // after reps' build-time count (it consumes sig's cache), before the
+    // returned Dataset exists
+    CacheHooks.unpersistAfterFirstUse(sig)
+    CacheHooks.unpersistAfterFirstUse(reps)
     nearEdges.unionByName(exactEdges)
       .orderBy("doc_a", "doc_b")
   }

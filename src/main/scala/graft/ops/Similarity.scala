@@ -55,18 +55,17 @@ object Similarity {
       .orderBy("query_id", "rk")
   }
 
-  private def perQueryTopK(scored: DataFrame, k: Int,
-      ordered: Boolean = true): DataFrame = {
+  /** Per-query top-k by cosine as an unordered relation: the rank is
+    * the `rk` column (from posexplode), never a sort.
+    */
+  private def perQueryTopK(scored: DataFrame, k: Int): DataFrame = {
     val topk = TopK.longIds(k)
-    val out = scored
+    scored
       .groupBy(col("query_id"))
       .agg(topk(col("cosine"), col("neighbor_id")).as("top"))
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("query_id"), col("s.id").as("neighbor_id"),
         col("s.score").as("cosine"), (col("pos") + 1).as("rk"))
-    // ranks come from posexplode, not the sort — consumers that
-    // re-aggregate (s10's RRF fusion) skip the discarded global sort
-    if (ordered) out.orderBy("query_id", "rk") else out
   }
 
   /** float[] → double[] (deterministic widening; matches SQL CAST). */
@@ -129,8 +128,7 @@ object Similarity {
     */
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame,
-      vecCol: String, idCol: String, k: Int,
-      ordered: Boolean = true): DataFrame = {
+      vecCol: String, idCol: String, k: Int): DataFrame = {
     // null embeddings are skipped, not crashed on: the pack/dot kernels
     // receive reference-typed arguments, so a NULL row would NPE the task
     val q = queries.filter(col(vecCol).isNotNull)
@@ -150,7 +148,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", dotBin(col("qv"), col("cv")) / (col("qn") * col("cn")))
-    perQueryTopK(scored, k, ordered)
+    perQueryTopK(scored, k)
   }
 
   /** Deterministic pseudo-random hyperplanes: component i of plane p is
@@ -305,7 +303,7 @@ object Similarity {
     // materialized once: the assignment subplan (crossJoin + dot kernel
     // + TopK) otherwise re-executes for the probed-cell collect AND the
     // join below
-    val queryCells = queries.filter(col(vecCol).isNotNull)
+    val queryCells = CacheHooks.materialize(queries.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("v"))
       .crossJoin(broadcast(cents))
       .withColumn("cdot", dot(col("v"), col("centv")))
@@ -314,13 +312,13 @@ object Similarity {
         first(col("v")).as("v"))
       .select(col("query_id"), pack(col("v")).as("query_id_p"),
         normBin(pack(col("v"))).as("query_id_n"),
-        explode(col("cells.id")).as("cell"))
-      .localCheckpoint()
+        explode(col("cells.id")).as("cell")))
     // the probed cell set is tiny (≤ nProbe × |queries|); as literals it
     // becomes a bucket-prunable IN predicate on the index scan
     val probed = queryCells.select("cell").distinct()
       .collect().map(_.getLong(0))
     val index = spark.table(table).filter(col("cell").isin(probed: _*))
+    CacheHooks.unpersistAfterFirstUse(queryCells) // before the returned Dataset exists
     val scored = index.join(broadcast(queryCells), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", dotBin(col("query_id_p"), col("neighbor_id_p")) /

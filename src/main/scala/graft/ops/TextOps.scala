@@ -51,59 +51,10 @@ object TextOps {
       conv(substring(m, 9, 8), 16, 10).cast("long")
   }
 
-  /** Conf key selecting how the shared token/gram/posting tables are
-    * materialized. Default (false): `localCheckpoint` — raw row blocks,
-    * fastest on a stable single JVM (measured at sf0.1: the persist
-    * path reads ~20-40% slower on t11/t23/t15 — columnar cache
-    * encode/decode on wide long tables — though noisy and t22 read
-    * faster; 8 bracketed passes, 2026-08). TRUE: persist + eager count
-    * + release-after-first-use — keeps lineage, so a lost executor's
-    * blocks recompute instead of failing the query, and dynamic
-    * allocation is safe. A long-lived deployment with executor churn
-    * should set this; a bench/batch run on stable executors should not.
-    */
-  val ReliableMaterializeConf = "spark.graft.reliableMaterialize"
-
-  private def reliable(df: DataFrame): Boolean =
-    df.sparkSession.conf.get(ReliableMaterializeConf, "false").toBoolean
-
-  /** Materialize a multiply-consumed intermediate (token/posting/gram
-    * occurrence tables). Under [[ReliableMaterializeConf]]: persist +
-    * eager count — NOT localCheckpoint, which truncates lineage and
-    * pins blocks to the executors that computed them, so one executor
-    * loss mid-query fails the whole job (at 1000 executors, loss is
-    * routine; a lost PERSISTED block just recomputes from lineage).
-    * Callers pass the frame to [[releaseAfterUse]] AFTER any build-time
-    * consumer (a second materialization derived from the first would
-    * otherwise release it prematurely), so repeated calls in a
-    * long-lived session don't accumulate cached tables.
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    if (reliable(df)) {
-      val p = df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else df.localCheckpoint()
-
-  // NOTE (r16, measured and rejected): re-asserting the key's hash
-  // partitioning AFTER the localCheckpoint (the ExistingRDD reports
-  // UnknownPartitioning, so downstream key-clustered aggregates re-plan
-  // an exchange that AQE coalesces into a 1-2-task stage — 480 ms
-  // serialized on t22's (query, doc) aggregate) was tried as
-  // `materialize(spread(..)).repartition(defaultParallelism, key)`.
-  // Solo, it split that stage into 33 tasks (450 -> 145 ms); across the
-  // 8 affected queries in interleaved A/B sweeps it was a net LOSS
-  // (sum of per-query minima 12.26 s with vs 10.58 s without): every
-  // consumer stage then runs cores× micro-tasks whose scheduling
-  // overhead exceeds the serialized-stage saving at bench scale. In
-  // reliable (cluster) mode the persist path preserves partitioning
-  // anyway, so production never needed it.
-
   /** Hash-repartition a kernel-built frame by `key` before
     * materialization IF its planned parallelism is below the session's:
-    * a single-row-group fixture scan is one task, and a localCheckpoint
-    * of it pins EVERY downstream consumer (joins, scoring projections)
+    * a single-row-group fixture scan is one task, and materializing it
+    * pins EVERY downstream consumer (joins, scoring projections)
     * to one partition until the next exchange. The gate makes this a
     * no-op at cluster scale, where scans carry orders of magnitude more
     * partitions than cores; locally the one shuffle of the compact
@@ -119,15 +70,6 @@ object TextOps {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < cores) df.repartition(key) else df
   }
-
-  /** Release reliable-mode materializations once the first action that
-    * consumed the returned plan completes (see
-    * [[CacheHooks.unpersistAfterFirstUse]]); localCheckpoint blocks
-    * release via GC/ContextCleaner as before, so default mode is a no-op.
-    */
-  private def releaseAfterUse(frames: DataFrame*): Unit =
-    frames.foreach(f =>
-      if (reliable(f)) CacheHooks.unpersistAfterFirstUse(f))
 
   /** Language-ID by stop-word markers: score = |tokens ∩ markers(lang)|,
     * winner = highest score with fixed priority order on ties.
@@ -503,8 +445,7 @@ object TextOps {
     * join against ONE count row each, no expansion.
     */
   def bigramLikelihood(
-      df: DataFrame, text: Column, idCol: Column,
-      ordered: Boolean = true): DataFrame = {
+      df: DataFrame, text: Column, idCol: Column): DataFrame = {
     // count and join on 63-bit gram hashes, not gram strings: 8-byte
     // shuffle keys instead of variable-width text (the two count joins
     // carry every bigram occurrence — key width IS the shuffle). hex64
@@ -520,7 +461,7 @@ object TextOps {
     val pairs = graft.functions.ShingleHashes.bigramTriples64Col(text)
     // two consumers (c2 and the scoring join) — materialize the
     // occurrence table instead of re-running the tokenize+hash kernel
-    val big = materialize(spread(df
+    val big = CacheHooks.materialize(spread(df
       .select(idCol.as("doc_id"), explode(pairs).as("p"))
       .select(col("doc_id"), col("p._1").as("h2"), col("p._2").as("h1")),
       col("doc_id")))
@@ -533,17 +474,13 @@ object TextOps {
     // stale-event threshold ignores QueryExecutions constructed earlier
     // than the registration, and the returned plan's QE is allocated at
     // Dataset CONSTRUCTION time
-    releaseAfterUse(big)
-    val agg = big.join(c2, Seq("h2"))
+    CacheHooks.unpersistAfterFirstUse(big)
+    big.join(c2, Seq("h2"))
       .join(c1, Seq("h1"))
       .withColumn("q", expr("(1000000 * c2) div c1"))
       .groupBy("doc_id")
       .agg(expr("sum(q) div count(*)").as("lm_score"),
         count(lit(1)).as("n_bigrams"))
-    // `ordered = false` for consumers that immediately re-shuffle the
-    // scores (p8's bucket join, p9's budget selection): the global sort
-    // they discard costs a sampling pass plus a range exchange
-    if (ordered) agg.orderBy("doc_id") else agg
   }
 
   /** Kneser-Ney smoothed bigram likelihood (the CCNet/KenLM-grade
@@ -573,10 +510,10 @@ object TextOps {
     // bigramLikelihood — same three-evaluations-to-one rationale)
     val pairs = graft.functions.ShingleHashes.bigramTriples64Col(text)
     // materialize the occurrence table once: five consumers derive from
-    // it (c2/c1/types and the scoring join) and without the checkpoint
+    // it (c2/c1/types and the scoring join) and without materializing
     // each re-runs the tokenize+hash kernel over the full corpus — the
     // same recompute the BM25 posting table avoids
-    val big = materialize(spread(df
+    val big = CacheHooks.materialize(spread(df
       .select(idCol.as("doc_id"), explode(pairs).as("p"))
       .select(col("doc_id"), col("p._1").as("h2"), col("p._2").as("h1"),
         col("p._3").as("hn")), col("doc_id")))
@@ -588,13 +525,14 @@ object TextOps {
     // (u1/u2/the scalar total) — one dedup shuffle, not three.
     // materialize AFTER big (its build-time count consumes big's cache;
     // big's release hook registers only below, after this)
-    val types = materialize(big.select("h1", "hn", "h2").distinct())
+    val types = CacheHooks.materialize(big.select("h1", "hn", "h2").distinct())
     val u1 = types.groupBy("h1").agg(count(lit(1)).as("u1"))
     val u2 = types.groupBy("hn").agg(count(lit(1)).as("u2"))
     val bTot = types.agg(count(lit(1)).as("bb"))
     // register AFTER types' build-time count (it consumes big's cache)
     // but BEFORE the returned Dataset is constructed (see bigram note)
-    releaseAfterUse(big, types)
+    CacheHooks.unpersistAfterFirstUse(big)
+    CacheHooks.unpersistAfterFirstUse(types)
     val out = big.join(c2, Seq("h2")).join(c1, Seq("h1"))
       .join(u1, Seq("h1")).join(u2, Seq("hn"))
       .crossJoin(broadcast(bTot))
@@ -752,7 +690,7 @@ object TextOps {
     // Term frequencies come from the per-document kernel (one tiny map
     // per doc), not a corpus-wide (doc, term) hash aggregate — same
     // rows, no occurrence shuffle (see bm25TopK)
-    val tf = materialize(spread(df
+    val tf = CacheHooks.materialize(spread(df
       .select(idCol.as("doc_id"),
         explode(graft.functions.ShingleHashes.termCountsStrCol(text)).as("p"))
       .select(col("doc_id"), col("p._1").as("term"), col("p._2").as("tf")),
@@ -760,7 +698,8 @@ object TextOps {
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("dfc"))
     val ndocs = df.agg(count(lit(1)).as("n"))
     val topkFn = graft.functions.TopK.stringIds(k)
-    releaseAfterUse(tf) // before the returned Dataset exists (see bigram)
+    // before the returned Dataset exists (see bigramLikelihood)
+    CacheHooks.unpersistAfterFirstUse(tf)
     val out = tf.join(dfreq, Seq("term"))
       .crossJoin(broadcast(ndocs))
       .withColumn("tfidf", expr("tf * ((1000000 * n) div dfc)"))
@@ -804,8 +743,7 @@ object TextOps {
   def bm25TopK(
       docs: DataFrame, text: Column, idCol: Column,
       queries: DataFrame, qText: Column, qIdCol: Column,
-      k: Int = 5, k1Milli: Long = 1200, bMilli: Long = 750,
-      ordered: Boolean = true): DataFrame = {
+      k: Int = 5, k1Milli: Long = 1200, bMilli: Long = 750): DataFrame = {
     // postings keyed on 63-bit term hashes, not term strings: 8-byte
     // shuffle/agg keys instead of variable-width text. Same md5-prefix
     // hash on both engines, and 63 bits keeps term identity
@@ -820,7 +758,7 @@ object TextOps {
     // the posting table is the index — materialize it once (a real
     // deployment persists it); doc lengths, document frequencies and the
     // corpus stats all derive from it without re-running the tokenizer
-    val tf = materialize(spread(docs
+    val tf = CacheHooks.materialize(spread(docs
       .select(idCol.as("doc_id"),
         explode(graft.functions.ShingleHashes.termCounts64Col(text)).as("p"))
       .select(col("doc_id"), col("p._1").as("term"), col("p._2").as("tf")),
@@ -835,7 +773,8 @@ object TextOps {
       .select(qIdCol.as("query_id"),
         explode(graft.functions.ShingleHashes(qText, 1, distinct = true,
           wide = true)).as("term"))
-    releaseAfterUse(tf) // before the returned Dataset exists (see bigram)
+    // before the returned Dataset exists (see bigramLikelihood)
+    CacheHooks.unpersistAfterFirstUse(tf)
     val scored = broadcast(qterms)
       .join(tf, Seq("term"))
       .join(dl, Seq("doc_id"))
@@ -852,16 +791,12 @@ object TextOps {
       .groupBy("query_id", "doc_id")
       .agg(sum("contrib").as("score_ppm"))
     val topkFn = graft.functions.TopK.longIds(k)
-    val out = scored
+    scored
       .groupBy("query_id")
       .agg(topkFn(col("score_ppm").cast("double"), col("doc_id")).as("_top"))
       .select(col("query_id"), posexplode(col("_top")).as(Seq("pos", "t")))
       .select(col("query_id"), (col("pos") + 1).cast("long").as("rk"),
         col("t.id").as("doc_id"), col("t.score").cast("long").as("score_ppm"))
-    // `ordered = false` for consumers that re-aggregate the ranking
-    // (s10's RRF fusion): ranks come from posexplode, not the sort, so
-    // the discarded global sort (sampling pass + range exchange) is skipped
-    if (ordered) out.orderBy("query_id", "rk") else out
   }
 
   /** T15: Naive-Bayes-style text classifier, trained and applied in one
@@ -894,14 +829,16 @@ object TextOps {
       labelCol: Column, minDf: Int = 1): DataFrame = {
     // the per-doc term-frequency table feeds training (ctc, and the
     // minDf df-counts) AND scoring — materialize it once (solo A/B:
-    // 1.46-1.58 s with vs 1.73-1.77 s re-tokenizing at sf0.1); likewise
-    // the (class, term) model below feeds three consumers (ctot, vocab,
-    // the score join). Frequencies come from the per-document kernel
-    // (see bm25TopK) so no corpus-wide occurrence rows ever exist:
+    // 1.46-1.58 s with vs 1.73-1.77 s re-tokenizing at sf0.1). The
+    // (class, term) model below also feeds three consumers (ctot, vocab,
+    // the score join) but stays lazy: all three read its one aggregate
+    // exchange, which ReuseExchange runs once. Frequencies come from
+    // the per-document kernel (see bm25TopK) so no corpus-wide
+    // occurrence rows ever exist:
     // per-class counts are sum(tf), document frequencies are plain row
     // counts (tf rows are distinct (doc, term) pairs), and the score
     // sum over occurrences becomes the exact integer w·tf.
-    val tf = materialize(spread(df.select(idCol.as("doc_id"),
+    val tf = CacheHooks.materialize(spread(df.select(idCol.as("doc_id"),
       labelCol.as("label"),
       explode(graft.functions.ShingleHashes.termCountsStrCol(text)).as("p"))
       .select(col("doc_id"), col("label"), col("p._1").as("term"),
@@ -917,27 +854,27 @@ object TextOps {
           .select("term")
         ctcAll.join(kept, Seq("term"), "left_semi")
       }
-    // materialized AFTER tf (this build-time count consumes tf's
-    // cache; tf's release hook registers only at the end)
-    val ctcM = materialize(ctc)
-    val ctot = ctcM.groupBy("clazz").agg(sum("ctc").as("ctot"))
-    val vocab = ctcM.select("term").distinct().agg(count(lit(1)).as("v"))
+    val ctot = ctc.groupBy("clazz").agg(sum("ctc").as("ctot"))
+    val vocab = ctc.select("term").distinct().agg(count(lit(1)).as("v"))
     val prior = df.groupBy(labelCol.as("clazz"))
       .agg(count(lit(1)).as("cdocs"))
     val ndocs = df.agg(count(lit(1)).as("n"))
     val classes = df.select(labelCol.as("clazz")).distinct()
-    // after ctcM's build-time count (it consumes tf's cache), before
-    // the returned Dataset exists (see bigram note)
-    releaseAfterUse(tf, ctcM)
+    // before the returned Dataset exists (see bigramLikelihood)
+    CacheHooks.unpersistAfterFirstUse(tf)
     // model pivoted to ONE row per term carrying a per-class count map:
     // the term join then moves |tf| rows instead of |tf|·|classes| (the
     // class expansion happens AFTER the join, map-side via the broadcast
     // cross join), and a missing map entry is exactly the old left-join
     // ctc=0 fill. NO broadcast hint on the model: it still scales with
     // the corpus vocabulary; Catalyst/AQE broadcasts it when it fits.
-    val mdl = ctcM.groupBy("term")
-      .agg(map_from_entries(collect_list(struct(col("clazz"), col("ctc"))))
-        .as("cw"))
+    // Null-label rows stay out of the map (a null key throws), as they
+    // never matched the old (clazz, term) equi-join: collect_list skips
+    // the nulls, and unlike a Filter it is not pushed below the ctc
+    // aggregate, so the model still shares that aggregate's exchange.
+    val mdl = ctc.groupBy("term")
+      .agg(map_from_entries(collect_list(when(col("clazz").isNotNull,
+        struct(col("clazz"), col("ctc"))))).as("cw"))
     val scored = tf.select("doc_id", "term", "tf")
       .join(mdl, Seq("term"), "left")
       .crossJoin(broadcast(classes))
@@ -986,7 +923,7 @@ object TextOps {
     // the threshold aggregate and the final bucket join both consume
     // `base`, but its upstream exchanges are shared by ReuseExchange
     // within the one plan (measured on p8: a materialize here only
-    // added a checkpoint job at flat task time) — so no checkpoint
+    // added a job at flat task time) — so it stays lazy
     val base = df.select(groupCol.as("grp"),
       scoreCol.cast("long").as("score"), idCol.cast("long").as("doc_id"))
     val cnt = base.groupBy("grp", "score").agg(count(lit(1)).as("cnt"))

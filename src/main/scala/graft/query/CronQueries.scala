@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.etl.SessionStore
 import graft.expr.Compiler
 import graft.model.FieldRegistry
-import graft.ops.{Forward, Notifier, Tagging}
+import graft.ops.{CacheHooks, Forward, Notifier, Tagging}
 
 /** Periodic saved-search processing — the viewer's cron queries
   * (reference: viewer/viewer.js:2199-2430 processCronQuery /
@@ -95,33 +95,34 @@ object CronQueries {
               // every per-batch hash filter below would otherwise each
               // re-scan the window's day partitions and re-run the
               // compiled predicate
-              val rows = matched.drop("day")
-                .as[graft.etl.SessionBuilder.SessionRow]
-                .localCheckpoint()
-              val n = rows.count()
-              if (n > 0) {
-                // bounded batches, like the reference's size-1000 scroll
-                // pages (viewer.js:2378): each send's offset map and
-                // destination file stay batch-sized however many
-                // sessions a window matches; the split is a
-                // deterministic hash of sessionId, so replay reproduces
-                // the same batches. Per-batch saveId — crash-replay of
-                // a window overwrites the same destination files.
-                val nBatches = math.max(1L,
-                  (n + forwardBatch - 1) / forwardBatch).toInt
-                for (b <- 0 until nBatches) {
-                  val part = if (nBatches == 1) rows
-                    else rows.filter(r =>
-                      math.floorMod(r.sessionId.hashCode, nBatches) == b)
-                  // the hash split can leave a batch empty under skew;
-                  // sending it would write a spurious 0-byte destination
-                  // pcap and an empty store append
-                  if (nBatches == 1 || !part.isEmpty)
-                    Forward.sendSessions(spark, part, dest,
-                      saveId = s"${cq.name}-$lp-$b", tags = cq.tags)
+              val rows = CacheHooks.materialize(matched.drop("day")
+                .as[graft.etl.SessionBuilder.SessionRow])
+              try {
+                val n = rows.count()
+                if (n > 0) {
+                  // bounded batches, like the reference's size-1000 scroll
+                  // pages (viewer.js:2378): each send's offset map and
+                  // destination file stay batch-sized however many
+                  // sessions a window matches; the split is a
+                  // deterministic hash of sessionId, so replay reproduces
+                  // the same batches. Per-batch saveId — crash-replay of
+                  // a window overwrites the same destination files.
+                  val nBatches = math.max(1L,
+                    (n + forwardBatch - 1) / forwardBatch).toInt
+                  for (b <- 0 until nBatches) {
+                    val part = if (nBatches == 1) rows
+                      else rows.filter(r =>
+                        math.floorMod(r.sessionId.hashCode, nBatches) == b)
+                    // the hash split can leave a batch empty under skew;
+                    // sending it would write a spurious 0-byte destination
+                    // pcap and an empty store append
+                    if (nBatches == 1 || !part.isEmpty)
+                      Forward.sendSessions(spark, part, dest,
+                        saveId = s"${cq.name}-$lp-$b", tags = cq.tags)
+                  }
                 }
-              }
-              total += n
+                total += n
+              } finally rows.unpersist()
             case None =>
               val n = matched.count()
               if (n > 0)

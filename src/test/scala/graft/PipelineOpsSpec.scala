@@ -109,35 +109,43 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("reliable materialize mode: identical results, lineage kept, cache released") {
-    // r14: spark.graft.reliableMaterialize=true switches the shared
-    // occurrence/token tables from localCheckpoint (lineage-truncating,
-    // executor-loss-fatal) to persist + eager count + CacheHooks
-    // release. Three invariants: results are bit-identical to default
-    // mode, the caches exist while the op builds, and they are GONE
-    // shortly after the first consuming action — repeated queries in
-    // one session must not accumulate cached gram tables.
-    val defaultRows = TextOps.knBigramScore(docs, col("text"), col("doc_id"))
-      .collect().map(_.toString).toSeq
-    // track OUR RDD ids, not the global count: the full suite runs
-    // specs in parallel against the shared session, and another spec
+    // the reliable mode is the only materialization mode: the shared
+    // occurrence table is persisted + eagerly counted (lineage kept, so
+    // a lost executor's blocks recompute) and released by CacheHooks
+    // once the first consuming action completes — repeated queries in
+    // one session must not accumulate cached gram tables, and a rebuild
+    // after the release returns bit-identical rows.
+    // Track OUR RDD ids, not the global count: the full suite runs specs
+    // in parallel against the shared session, and another spec
     // persisting mid-window would flake a count-based check
     def ids: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    spark.conf.set(TextOps.ReliableMaterializeConf, "true")
-    try {
-      val before = ids
-      val q = TextOps.knBigramScore(docs, col("text"), col("doc_id"))
-      val added = ids -- before
-      assert(added.nonEmpty,
-        "occurrence/type tables should be cached during build")
-      assert(q.collect().map(_.toString).toSeq == defaultRows,
-        "reliable mode must produce bit-identical results")
+    // fill the spec's own cached input first, so its RDD is not counted
+    // among the operator's tables when this test runs first
+    docs.count()
+    def released(added: Set[Int], run: Int): Unit = {
       val deadline = System.currentTimeMillis + 30000
       while ((ids & added).nonEmpty && System.currentTimeMillis < deadline)
         Thread.sleep(100)
       assert((ids & added).isEmpty,
-        s"gram tables still cached (${(ids & added).size} of ${added.size}) " +
-          "30s after the first action — the release hooks are not firing")
-    } finally spark.conf.unset(TextOps.ReliableMaterializeConf)
+        s"run $run: gram tables still cached (${(ids & added).size} of " +
+          s"${added.size}) 30s after the first action — the release hooks " +
+          "are not firing")
+    }
+    def run(n: Int): Seq[String] = {
+      val before = ids
+      val q = TextOps.knBigramScore(docs, col("text"), col("doc_id"))
+      val added = ids -- before
+      assert(added.nonEmpty, "occurrence table should be cached during build")
+      for (id <- added; rdd <- spark.sparkContext.getPersistentRDDs.get(id)) {
+        assert(!rdd.isCheckpointed, s"rdd $id lost its lineage to a checkpoint")
+        assert(rdd.dependencies.nonEmpty, s"rdd $id has no lineage")
+      }
+      val rows = q.collect().map(_.toString).toSeq.sorted
+      assert(rows.nonEmpty)
+      released(added, n)
+      rows
+    }
+    assert(run(1) == run(2), "a rebuild after release must return identical rows")
   }
 
   test("ShingleHashes distinct preserves set semantics") {
@@ -205,7 +213,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
       (4L, "the quick dog")).toDF("doc_id", "text")
     val q = Seq((100L, "quick brown fox")).toDF("qid", "qt")
     val res = TextOps.bm25TopK(d, col("text"), col("doc_id"),
-      q, col("qt"), col("qid"), k = 3).collect()
+      q, col("qt"), col("qid"), k = 3).orderBy("rk").collect()
     // doc 1 has all three terms at minimal length -> rank 1; doc 2 has
     // the same terms but BM25 length normalization pushes it below; doc 4
     // shares only "quick"; doc 3 never appears
@@ -228,12 +236,18 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
 
   test("nbClassify: separable vocab is classified perfectly") {
     import spark.implicits._
-    val d = Seq(
+    // doc 7 has a null label: it stays out of the model (a null map key
+    // would throw) but is still scored against the labelled classes
+    val d = Seq[(Long, String, String)](
       (1L, "aa aa bb", "x"), (2L, "aa bb bb", "x"), (3L, "aa aa aa", "x"),
-      (4L, "cc cc dd", "y"), (5L, "cc dd dd", "y"), (6L, "dd dd dd", "y"))
+      (4L, "cc cc dd", "y"), (5L, "cc dd dd", "y"), (6L, "dd dd dd", "y"),
+      (7L, "aa aa bb", null))
       .toDF("doc_id", "text", "lang")
     val res = TextOps.nbClassify(d, col("text"), col("doc_id"), col("lang"))
     assert(res.agg(sum("hit")).head.getLong(0) == 6L)
+    val unlabelled = res.filter(col("doc_id") === 7L).head
+    assert(unlabelled.getAs[String]("pred") == "x")
+    assert(unlabelled.isNullAt(unlabelled.fieldIndex("hit")))
   }
 
   test("nbClassify: model-join strategy and minDf vocabulary cut preserve scores") {
@@ -332,7 +346,8 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     import spark.implicits._
     val df = Seq((1L, "a b a b"), (2L, "a b c")).toDF("doc_id", "text")
     val r = TextOps.bigramLikelihood(df, col("text"), col("doc_id"))
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
+      .orderBy("doc_id").collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
     // c1: a=3 b=3 c=1; c2: "a b"=3 "b a"=1 "b c"=1
     // doc1 qs = [1000000, 333333, 1000000] → 2333333 div 3 = 777777
     // doc2 qs = [1000000, 333333] → 1333333 div 2 = 666666
@@ -530,8 +545,10 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
       "embedding", "vec_id", 5, cents, nProbe = 2)
     val direct = Similarity.ivfTopK(emb, queries, "embedding", "vec_id", 5,
       nCells = 4, nProbe = 2, centroids = Some(cents))
-    val p = probed.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val d = direct.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+    val p = probed.orderBy("query_id", "rk").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+    val d = direct.orderBy("query_id", "rk").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(p.toSeq == d.toSeq) // same rows, bit-identical cosines, same order
     // the probe reads only the buckets its cells hash to — pruning is in the scan
     val scan = probed.queryExecution.executedPlan.toString
@@ -554,6 +571,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     val queries = emb.filter(col("vec_id") < 3)
     def run(t: String) = Similarity.ivfProbeIndex(spark, t, queries,
       "embedding", "vec_id", 5, cents, nProbe = 2)
+      .orderBy("query_id", "rk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(run("ivf_idx_incr").toSeq == run("ivf_idx_full").toSeq)
   }
@@ -704,6 +722,44 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     val g = Dedup.resolveGroups(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(g == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+  }
+
+  test("resolveGroups: a late convergence metric falls back to the synchronous count") {
+    import spark.implicits._
+    // a chain deep enough to need several rounds, plus a separate star
+    val pairs = ((1L until 40L).map(i => (i, i + 1)) ++
+      (101L to 110L).map(i => (100L, i))).toDF("doc_a", "doc_b")
+    def groups() = Dedup.resolveGroups(pairs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    val normal = groups()
+    // hold the listener bus so each round's observed metric is still in
+    // flight when the (zero) wait expires
+    @volatile var hold = true
+    val stall = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def pause(): Unit = {
+        val until = System.currentTimeMillis + 5000
+        while (hold && System.currentTimeMillis < until) Thread.sleep(20)
+      }
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = pause()
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = pause()
+    }
+    val prevWait = Dedup.observedMetricWait
+    spark.listenerManager.register(stall)
+    Dedup.observedMetricWait = scala.concurrent.duration.Duration.Zero
+    val fallback = try {
+      val g = groups()
+      assert(Dedup.lastResolveFallbacks > 0,
+        "the zero wait should have forced the synchronous count")
+      g
+    } finally {
+      Dedup.observedMetricWait = prevWait
+      hold = false
+      spark.listenerManager.unregister(stall)
+    }
+    assert(fallback == normal)
+    assert(normal(40L) == 1L && normal(110L) == 100L)
   }
 
   test("resolveGroups group ids are component minima on real candidates") {
