@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -14,15 +15,33 @@ import graft.functions.{IpInCidrExpr, IpSortableExpr}
   * so graft's native expressions must be injectable by config alone. Any
   * session built with the extension gets `ip_in_cidr` / `ip_sortable` in
   * its catalog; `graft.Sessions.builder` sessions can keep using the
-  * imperative [[graft.functions.CidrExpression.register]] path.
+  * imperative [[GraftExtensions.register]] path. Columns built by
+  * [[graft.functions.IpFunctions]] carry the expressions directly and
+  * need neither.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("ip_in_cidr"),
-      new ExpressionInfo(classOf[IpInCidrExpr].getName, "ip_in_cidr"),
-      (exprs: Seq[Expression]) => {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
+
+object GraftExtensions {
+
+  /** The native SQL functions, one table for [[GraftExtensions.apply]]
+    * and [[register]]. `graft_expr('<session expression>')` is the whole
+    * session expression language as a SQL predicate
+    * (`... WHERE graft_expr('http.uri == *login* && country == US')`):
+    * its compiled tree's UnresolvedAttributes resolve against the
+    * enclosing plan, so it works over any relation with session-schema
+    * columns. Relative dates snap against `spark.graft.now` (ISO
+    * instant) when set — pin it for deterministic replay — else wall
+    * clock.
+    */
+  private[graft] val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = {
+    def fn(name: String, cls: Class[_])(b: FunctionBuilder) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), b)
+    Seq(
+      fn("ip_in_cidr", classOf[IpInCidrExpr]) { exprs =>
         require(exprs.length == 2, "ip_in_cidr(ipCol, 'cidr')")
         val cidr = exprs(1) match {
           case Literal(s: UTF8String, _) => s.toString
@@ -30,30 +49,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             s"ip_in_cidr: cidr must be a string literal, got $other")
         }
         IpInCidrExpr(exprs.head, cidr)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("ip_sortable"),
-      new ExpressionInfo(classOf[IpSortableExpr].getName, "ip_sortable"),
-      (exprs: Seq[Expression]) => {
+      },
+      fn("ip_sortable", classOf[IpSortableExpr]) { exprs =>
         require(exprs.length == 1, "ip_sortable(ipCol)")
         IpSortableExpr(exprs.head)
-      }))
-    // The whole session expression language as a SQL predicate:
-    //   SELECT ... FROM sessions WHERE graft_expr('http.uri == *login* && country == US')
-    // The compiled tree contains UnresolvedAttributes for the session
-    // columns; the analyzer resolves them against the enclosing plan, so
-    // the function works over any relation with session-schema columns
-    // (table, view, subquery). Relative dates snap against
-    // `spark.graft.now` (ISO instant) when set — pin it for deterministic
-    // replay — else wall clock.
-    ext.injectFunction((
-      FunctionIdentifier("graft_expr"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "graft_expr"),
-      GraftExtensions.graftExprBuilder))
+      },
+      fn("graft_expr", classOf[GraftExtensions])(graftExprBuilder))
   }
-}
 
-object GraftExtensions {
+  /** Put [[functions]] in `spark`'s registry. Idempotent and silent: the
+    * table's entries are the same instances on every call, so
+    * re-registering replaces nothing.
+    */
+  private[graft] def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit =
+    functions.foreach { case (id, info, b) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, b)
+    }
 
   /** FunctionBuilder for `graft_expr('<session expression>')`. */
   private[graft] def graftExprBuilder(exprs: Seq[Expression]): Expression = {
@@ -80,9 +91,7 @@ object GraftExtensions {
     * `graft_simhash(text)` → long.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.functions.CidrExpression.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_expr", graftExprBuilder, "built-in")
+    registerFunctions(spark)
     spark.udf.register("shingle_hashes",
       (s: String, k: Int, distinct: Boolean) =>
         graft.functions.ShingleHashes.hashes(s, k, distinct))

@@ -943,12 +943,11 @@ object HttpParser {
   /** ITEM-HTTP's display split (viewer/decode.js ItemHTTPStream): per
     * message, the raw header block (incl. separator bytes) at its
     * stream offset, then — when a framed body exists — the de-chunked
-    * body at the body's offset. The Boolean flags body items.
-    * (`isResponse` is kept for API stability; the walker self-detects
-    * message types exactly like the HTTP_BOTH parsers it mirrors.)
+    * body at the body's offset. The Boolean flags body items. The walker
+    * self-detects message types exactly like the HTTP_BOTH parsers it
+    * mirrors, so either direction's stream goes in as is.
     */
-  def displayItems(stream: Array[Byte],
-      isResponse: Boolean): Seq[(Long, Array[Byte], Boolean)] =
+  def displayItems(stream: Array[Byte]): Seq[(Long, Array[Byte], Boolean)] =
     frame(stream).flatMap { m =>
       val header = (m.start.toLong,
         java.util.Arrays.copyOfRange(stream, m.start,

@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.io.RandomAccessFile
 import java.nio.ByteBuffer
 import java.security.MessageDigest
 
@@ -139,31 +138,15 @@ object PcapCrypto {
     case other => throw new IllegalArgumentException(s"unknown pcap encoding $other")
   }
 
-  /** Seek-read `len` plaintext bytes at absolute offset `pos` — the
-    * drop-in replacement for a raw `seek` + `readFully` that Hunt and
-    * PcapExport use against plain files. Returns null on short reads
-    * (mirrors their catch-and-skip behavior).
-    */
-  /** Backend-agnostic form: ranged read through any [[PcapStore.Blob]]
-    * (local file or chunked-object store), then in-place decrypt at the
-    * absolute offset — CTR/XOR seek math only depends on `pos`.
+  /** Read `len` plaintext bytes at absolute offset `pos`: a ranged read
+    * through any [[PcapStore.Blob]] (local file or chunked-object store),
+    * then in-place decrypt at that offset — CTR/XOR seek math only
+    * depends on `pos`.
     */
   def readSlice(blob: PcapStore.Blob, pos: Long, len: Int,
       k: FileKeys): Array[Byte] = {
     val b = blob.read(pos, len)
     if (!k.encrypted) b else decryptAt(b, pos, k)
-  }
-
-  def readSlice(raf: RandomAccessFile, pos: Long, len: Int, k: FileKeys): Array[Byte] = {
-    if (!k.encrypted) {
-      val b = new Array[Byte](len)
-      raf.seek(pos); raf.readFully(b)
-      b
-    } else {
-      val b = new Array[Byte](len)
-      raf.seek(pos); raf.readFully(b)
-      decryptAt(b, pos, k)
-    }
   }
 
   /** Encrypt a whole plaintext stream as the writer would (one CTR stream

@@ -31,9 +31,10 @@ object SessionStore {
   /** UTC calendar date of an epoch-millis column, independent of
     * spark.sql.session.timeZone — date_format on a timestamp would
     * shift the partition key under a non-UTC session while [[expire]]
-    * computes its cutoff in UTC (off-by-a-day retention).
+    * computes its cutoff in UTC (off-by-a-day retention). The one day
+    * expression of every store writer, the streaming sink included.
     */
-  private def utcDay(ms: org.apache.spark.sql.Column) =
+  private[graft] def utcDay(ms: org.apache.spark.sql.Column) =
     date_format(date_add(lit("1970-01-01").cast("date"),
       floor(ms / 86400000L).cast("int")), "yyyy-MM-dd")
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -15,9 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * WholeStageCodegen span (a Scala UDF here would break the span and pay
   * serialization per row).
   *
-  * Registered in the session FunctionRegistry ([[CidrExpression.register]])
-  * so it is reachable from SQL text and from `call_function` — the public
-  * route to custom expressions in Spark 4.
+  * Columns carry the expression directly ([[IpFunctions.ipInCidr]]); SQL
+  * text reaches it by name once [[graft.GraftExtensions]] (by config) or
+  * [[graft.GraftExtensions.register]] put it in the session registry.
   */
 case class IpInCidrExpr(child: Expression, cidr: String)
     extends UnaryExpression {
@@ -28,6 +27,10 @@ case class IpInCidrExpr(child: Expression, cidr: String)
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
   override def prettyName: String = "ip_in_cidr"
+
+  // the CIDR is a field, not a child: render it too, so the SQL text
+  // re-parses (`/api/buildquery` returns it)
+  override def sql: String = s"$prettyName(${child.sql}, ${Literal(cidr).sql})"
 
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
@@ -83,35 +86,4 @@ case class IpSortableExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object CidrExpression {
-
-  /** Make `ip_in_cidr` / `ip_sortable` available in the session registry.
-    * Idempotent: skips sessions that already have them (re-registering is
-    * harmless but warns on every call).
-    */
-  def register(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("ip_in_cidr"))) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ip_in_cidr",
-      exprs => {
-        require(exprs.length == 2, "ip_in_cidr(ipCol, 'cidr')")
-        val cidr = exprs(1) match {
-          case Literal(s: UTF8String, _) => s.toString
-          case other => throw new IllegalArgumentException(
-            s"ip_in_cidr: cidr must be a string literal, got $other")
-        }
-        IpInCidrExpr(exprs.head, cidr)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ip_sortable",
-      exprs => {
-        require(exprs.length == 1, "ip_sortable(ipCol)")
-        IpSortableExpr(exprs.head)
-      },
-      "built-in")
-  }
 }

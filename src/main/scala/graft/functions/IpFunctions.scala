@@ -2,28 +2,17 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** Column-level IP operations built from Catalyst built-ins where possible.
-  *
-  * CIDR membership over a *string* ip column is evaluated via a scala UDF
-  * for v1 (filter-side only; candidate for a codegen'd Expression later).
-  * For binary (16-byte) ip columns we compare prefix bytes with built-in
-  * `substring`/literal comparisons, which stays inside whole-stage codegen
-  * and pushes down min/max pruning on the binary sort key.
+/** Column-level IP operations over canonical ip-string columns. CIDR
+  * membership and the sortable form are the codegen'd native
+  * expressions [[IpInCidrExpr]] / [[IpSortableExpr]], carried by the
+  * Column itself — no session or function registry is involved.
   */
 object IpFunctions {
 
-  private val cidrMatchUdf = udf { (ip: String, cidr: String) =>
-    if (ip == null || cidr == null) false
-    else IpUtil.parseCidr(IpUtil.expandShorthand(cidr)) match {
-      case Some(c) => c.contains(IpUtil.toBytes(ip))
-      case None    => false
-    }
-  }
-
-  /** String-ip column ∈ CIDR (constant). Uses the codegen'd
-    * [[IpInCidrExpr]] when a session is active (registered on demand);
-    * falls back to the UDF form outside a session.
+  /** String-ip column ∈ CIDR (constant), or exact ip equality when the
+    * value has no prefix length.
     */
   def ipInCidr(ipCol: Column, cidr: String): Column = {
     val norm = IpUtil.expandShorthand(cidr)
@@ -37,43 +26,12 @@ object IpFunctions {
           case _: Exception => norm // unparsable: keep the raw compare
         }
       ipCol === lit(canon)
-    } else {
-      org.apache.spark.sql.SparkSession.getActiveSession match {
-        case Some(spark) =>
-          CidrExpression.register(spark)
-          call_function("ip_in_cidr", ipCol, lit(norm))
-        case None => cidrMatchUdf(ipCol, lit(norm))
-      }
-    }
+    } else ColumnBridge.column(IpInCidrExpr(ColumnBridge.expression(ipCol), norm))
   }
-
-  private val sortableUdf = udf { (ip: String) => IpUtil.toBytes(ip) }
 
   /** String-ip column → fixed-width 16-byte sortable form (v4-mapped),
-    * for numeric-order range comparisons. Codegen'd [[IpSortableExpr]]
-    * when a session is active.
+    * for numeric-order range comparisons.
     */
   def ipSortable(ipCol: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(spark) =>
-        CidrExpression.register(spark)
-        call_function("ip_sortable", ipCol)
-      case None => sortableUdf(ipCol)
-    }
-
-  /** Binary(16) ip column ∈ CIDR — pure built-ins, codegen-friendly.
-    * Only whole-byte prefixes use the fast path; others fall back.
-    */
-  def ipBinInCidr(ipBin: Column, cidr: String): Column = {
-    IpUtil.parseCidr(IpUtil.expandShorthand(cidr)) match {
-      case Some(c) if c.prefixLen % 8 == 0 =>
-        val nBytes = c.prefixLen / 8
-        if (nBytes == 0) ipBin.isNotNull
-        else substring(ipBin, 1, nBytes) === lit(c.base.take(nBytes))
-      case Some(c) =>
-        val udfMatch = udf((b: Array[Byte]) => b != null && c.contains(b))
-        udfMatch(ipBin)
-      case None => lit(false)
-    }
-  }
+    ColumnBridge.column(IpSortableExpr(ColumnBridge.expression(ipCol)))
 }

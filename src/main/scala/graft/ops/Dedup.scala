@@ -346,13 +346,10 @@ object Dedup {
     * O(component diameter) rounds — near-dup components are shallow
     * (stars/chains of a handful of docs), so 3-5 rounds close 100 TB runs.
     * Each round is one shuffle of (node, label) pairs, never edges², and
-    * the edge list is cached once. The loop stops early at a fixpoint,
-    * read from an observed metric on the round's own materializing job
-    * (the driver-side analogue of Pregel's "no messages" halt, at zero
-    * extra jobs per round). The metric rides the async listener bus, so
-    * its wait is bounded by [[observedMetricWait]]; a metric that does
-    * not arrive in time is replaced by a synchronous count of the
-    * changed labels over the two materialized rounds.
+    * the edge list is cached once. The loop stops early at a fixpoint:
+    * each round's cache is filled by counting the labels it lowered (the
+    * driver-side analogue of Pregel's "no messages" halt), so the
+    * convergence check is the round's own materializing job.
     */
   def resolveGroups(
       pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
@@ -361,7 +358,6 @@ object Dedup {
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .cache()
-    lastResolveFallbacks = 0
     // every round is materialized: the next round references the labels
     // through two differently-keyed joins, which ReuseExchange cannot
     // share (measured: leaving the init frame lazy re-ran the aggregate
@@ -377,27 +373,22 @@ object Dedup {
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
-      val cur = leaf(labels)
+      val cur = leaf(labels.select(col("id"), col("label")))
       // neighborhood min: each node's label offered to every neighbor
       val offered = edges.join(cur, col("dst") === col("id"))
         .groupBy(col("src").as("id")).agg(min(col("label")).as("nmin"))
-      // convergence detection rides the materializing job as an
-      // observed metric (CollectMetrics evaluates while the cache
-      // builds): one job per propagation round. The `old` column is
-      // consumed by the metric below the final projection and never
-      // reaches the cached rows.
-      val obs = org.apache.spark.sql.Observation()
-      val stepped = CacheHooks.materialize(
-        cur.join(offered, Seq("id"), "left")
-          .select(col("id"), col("label").as("old"),
-            least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-          .observe(obs, count(when(col("label") < col("old"), 1)).as("changed"))
-          .select(col("id"), col("label")))
+      // the round is cached WITH its previous label (`old`), and the
+      // job that fills the cache counts the labels it lowered: one job
+      // per propagation round, answered synchronously
+      val stepped = cur.join(offered, Seq("id"), "left")
+        .select(col("id"), col("label").as("old"),
+          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // a propagation fixed point IS full convergence (labels are
       // monotone non-increasing; unchanged everywhere ⇒ every node
       // already holds its neighborhood min), so check BEFORE jumping —
       // the final round never pays the jump join
-      converged = changedLabels(obs, stepped, labels) == 0L
+      converged = stepped.filter(col("label") < col("old")).count() == 0L
       labels.unpersist()
       if (converged || round == 0) {
         // round 0 also skips the jump: star-shaped candidate graphs
@@ -410,7 +401,7 @@ object Dedup {
         // (labels only decrease, and every label is itself a node id) —
         // this multiplies the propagation distance per round, turning
         // O(diameter) convergence into O(log diameter)
-        val st = leaf(stepped)
+        val st = leaf(stepped.select(col("id"), col("label")))
         val lab2 = st.select(col("id").as("_jid"), col("label").as("_jlabel"))
         labels = CacheHooks.materialize(
           st.join(lab2, st("label") === lab2("_jid"), "left")
@@ -432,36 +423,6 @@ object Dedup {
     CacheHooks.unpersistAfterFirstUse(labels)
     labels.select(col("id").as("doc_id"), col("label").as("group_id"))
   }
-
-  /** Labels a propagation round lowered: the round's observed metric
-    * when it arrives within [[observedMetricWait]], else the same count
-    * taken synchronously over the two materialized rounds (each node's
-    * label before and after). Observed metrics ride the async listener
-    * bus, which drops events under load; an unbounded wait would then
-    * hang the loop.
-    */
-  private def changedLabels(obs: org.apache.spark.sql.Observation,
-      stepped: DataFrame, prev: DataFrame): Long = {
-    val metric =
-      try Some(scala.concurrent.Await.result(obs.future, observedMetricWait))
-      catch { case _: java.util.concurrent.TimeoutException => None }
-    metric.map(_.getAs[Long]("changed")).getOrElse {
-      lastResolveFallbacks += 1
-      stepped.join(prev.select(col("id"), col("label").as("old")), Seq("id"))
-        .filter(col("label") < col("old")).count()
-    }
-  }
-
-  /** How long [[resolveGroups]] waits for a round's observed metric
-    * before counting the changed labels itself.
-    */
-  @volatile private[graft] var observedMetricWait: scala.concurrent.duration.Duration =
-    scala.concurrent.duration.Duration(30, "s")
-
-  /** Rounds of the most recent [[resolveGroups]] call whose convergence
-    * check fell back to the synchronous count (see [[changedLabels]]).
-    */
-  @volatile private[graft] var lastResolveFallbacks: Int = 0
 
   /** Rounds the most recent [[resolveGroups]] call took to converge —
     * observability for ScaleProbeSpec, which pins that the round count

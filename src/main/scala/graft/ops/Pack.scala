@@ -45,43 +45,8 @@ object Pack {
       df: DataFrame,
       orderCol: String,
       valueCol: String,
-      buckets: Int = 64): DataFrame = {
-    val head = df.agg(
-      min(col(orderCol).cast("long")), max(col(orderCol).cast("long"))).head()
-    if (head.isNullAt(0)) return df.withColumn("prev_cumsum", lit(0L))
-    val lo = head.getLong(0)
-    val span = math.max(1L, (head.getLong(1) - lo) / buckets + 1)
-    val withBucket = df
-      .withColumn("_ps_bucket",
-        floor((col(orderCol).cast("long") - lit(lo)) / lit(span)).cast("long"))
-      .withColumn("_ps_v", coalesce(col(valueCol).cast("long"), lit(0L)))
-    // per-bucket totals: tiny (≤ buckets rows), partial aggregation
-    // map-side — the only driver-bound data in the whole operator
-    val totals = withBucket.groupBy(col("_ps_bucket"))
-      .agg(sum(col("_ps_v")).as("t"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val offsets: Map[Long, Long] = totals.zip(
-      totals.scanLeft(0L)(_ + _._2)).map { case ((b, _), off) => (b, off) }.toMap
-    val parted = withBucket
-      .repartition(buckets, col("_ps_bucket"))
-      .sortWithinPartitions(col("_ps_bucket"), col(orderCol))
-    val bIdx = parted.schema.fieldIndex("_ps_bucket")
-    val vIdx = parted.schema.fieldIndex("_ps_v")
-    val outSchema = StructType(
-      parted.schema.fields :+ StructField("prev_cumsum", LongType, nullable = false))
-    parted.mapPartitions { it =>
-      var curBucket = Long.MinValue
-      var running = 0L
-      it.map { r =>
-        val b = r.getLong(bIdx)
-        if (b != curBucket) { curBucket = b; running = offsets.getOrElse(b, 0L) }
-        val out = Row.fromSeq(r.toSeq :+ running)
-        running += r.getLong(vIdx)
-        out
-      }
-    }(Encoders.row(outSchema))
-      .drop("_ps_bucket").drop("_ps_v")
-  }
+      buckets: Int = 64): DataFrame =
+    prefixSumOver(df, None, orderCol, valueCol, buckets)
 
   /** Per-GROUP exact prefix sum: [[prefixSum]] with an independent
     * running total per `groupCol` value — `prev_cumsum` = sum of
@@ -99,27 +64,43 @@ object Pack {
       groupCol: String,
       orderCol: String,
       valueCol: String,
-      buckets: Int = 64): DataFrame = {
+      buckets: Int = 64): DataFrame =
+    prefixSumOver(df, Some(groupCol), orderCol, valueCol, buckets)
+
+  /** The two-pass kernel behind [[prefixSum]] (no group: one running
+    * total, and no per-row group column) and [[prefixSumBy]].
+    */
+  private def prefixSumOver(
+      df: DataFrame,
+      groupCol: Option[String],
+      orderCol: String,
+      valueCol: String,
+      buckets: Int): DataFrame = {
     val head = df.agg(
       min(col(orderCol).cast("long")), max(col(orderCol).cast("long"))).head()
     if (head.isNullAt(0)) return df.withColumn("prev_cumsum", lit(0L))
     val lo = head.getLong(0)
     val span = math.max(1L, (head.getLong(1) - lo) / buckets + 1)
-    val withBucket = df
+    val bucketed = df
       .withColumn("_ps_bucket",
         floor((col(orderCol).cast("long") - lit(lo)) / lit(span)).cast("long"))
       .withColumn("_ps_v", coalesce(col(valueCol).cast("long"), lit(0L)))
-      // group key normalized ONCE by Catalyst: the driver-side offsets
-      // and the per-row scan below must read the SAME string form (a
-      // JVM String.valueOf of the raw value disagrees with the SQL cast
-      // for timestamps, and a null group key would NPE the sort)
-      .withColumn("_ps_g",
-        coalesce(col(groupCol).cast("string"), lit("\u0000null")))
+    // group key normalized ONCE by Catalyst: the driver-side offsets
+    // and the per-row scan below must read the SAME string form (a
+    // JVM String.valueOf of the raw value disagrees with the SQL cast
+    // for timestamps, and a null group key would NPE the sort)
+    val withBucket = groupCol.fold(bucketed)(g => bucketed.withColumn("_ps_g",
+      coalesce(col(g).cast("string"), lit("\u0000null"))))
+    val group = groupCol.map(_ => col("_ps_g")).toSeq
+    // per-(group, bucket) totals: tiny, partial aggregation map-side —
+    // the only driver-bound data in the whole operator
     val totals = withBucket
-      .groupBy(col("_ps_g"), col("_ps_bucket"))
+      .groupBy(group :+ col("_ps_bucket"): _*)
       .agg(sum(col("_ps_v")).as("t"))
-      .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2)))
-      .sortBy(_._1)
+      .collect().map { r =>
+        val n = r.length
+        ((if (group.isEmpty) "" else r.getString(0), r.getLong(n - 2)), r.getLong(n - 1))
+      }
     // per-group running offset across its buckets in key order
     val offsets: Map[(String, Long), Long] = totals
       .groupBy(_._1._1).toSeq
@@ -129,8 +110,8 @@ object Pack {
       }.toMap
     val parted = withBucket
       .repartition(buckets, col("_ps_bucket"))
-      .sortWithinPartitions(col("_ps_bucket"), col("_ps_g"), col(orderCol))
-    val gIdx = parted.schema.fieldIndex("_ps_g")
+      .sortWithinPartitions(col("_ps_bucket") +: group :+ col(orderCol): _*)
+    val gIdx = if (group.isEmpty) -1 else parted.schema.fieldIndex("_ps_g")
     val bIdx = parted.schema.fieldIndex("_ps_bucket")
     val vIdx = parted.schema.fieldIndex("_ps_v")
     val outSchema = StructType(
@@ -141,7 +122,7 @@ object Pack {
       var running = 0L
       it.map { r =>
         val b = r.getLong(bIdx)
-        val g = r.getString(gIdx)
+        val g = if (gIdx < 0) "" else r.getString(gIdx)
         if (b != curBucket || g != curGroup) {
           curBucket = b; curGroup = g
           running = offsets.getOrElse((g, b), 0L)
@@ -151,7 +132,7 @@ object Pack {
         out
       }
     }(Encoders.row(outSchema))
-      .drop("_ps_bucket").drop("_ps_v")
+      .drop("_ps_bucket", "_ps_v", "_ps_g")
   }
 
   /** P12: dataset-mixture realization under a global token budget —

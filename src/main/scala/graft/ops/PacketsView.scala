@@ -159,7 +159,7 @@ object PacketsView {
           while (i + 1 < bounds.length && bounds(i + 1) <= off) i += 1
           runs(math.min(i, runs.length - 1)).tsMs
         }
-        graft.etl.HttpParser.displayItems(stream, isResponse = dir == 1)
+        graft.etl.HttpParser.displayItems(stream)
           .map { case (off, bytes, isBody) => (tsAt(off), bytes, isBody) }
       }
     }

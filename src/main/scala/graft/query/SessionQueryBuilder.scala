@@ -140,6 +140,9 @@ final case class SessionQueryBuilder(
           .take(100000).map(_.toString).toSeq
       case _ => Nil
     }
+    // the text names ip_in_cidr/ip_sortable, which Columns carry as
+    // expressions; register the names so `expr(filterSql)` resolves here
+    graft.GraftExtensions.registerFunctions(sessions.sparkSession)
     SessionQueryBuilder.BuiltQuery(
       pred.map(p => org.apache.spark.sql.graftbridge.ColumnBridge
         .filterSql(sessions, p)).getOrElse("true"), days, fields)

@@ -24,8 +24,7 @@ object SessionSink {
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
     sessions.toDF()
-      .withColumn("day",
-        date_format(timestamp_millis(col("firstPacket")), "yyyy-MM-dd"))
+      .withColumn("day", graft.etl.SessionStore.utcDay(col("firstPacket")))
       .writeStream
       .format("parquet")
       .option("path", path)

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ColumnNodeToExpressionConverter
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Bridge to the sql-private Column <-> Expression converters: Spark 4
   * removed `Column.expr` from the public surface (columns are now
@@ -16,6 +16,10 @@ import org.apache.spark.sql.classic.ColumnNodeToExpressionConverter
 object ColumnBridge {
   def expression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
+
+  /** A Column carrying a Catalyst expression as is (the inverse). */
+  def column(e: Expression): Column =
+    ExpressionUtils.column(e)
 
   /** A predicate Column as RE-PARSEABLE Spark SQL: analyzed against
     * `df`'s schema (so operators render infix, not the raw tree's

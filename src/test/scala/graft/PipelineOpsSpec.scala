@@ -724,7 +724,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     assert(g == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
-  test("resolveGroups: a late convergence metric falls back to the synchronous count") {
+  test("resolveGroups: convergence needs no listener event") {
     import spark.implicits._
     // a chain deep enough to need several rounds, plus a separate star
     val pairs = ((1L until 40L).map(i => (i, i + 1)) ++
@@ -732,8 +732,8 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     def groups() = Dedup.resolveGroups(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     val normal = groups()
-    // hold the listener bus so each round's observed metric is still in
-    // flight when the (zero) wait expires
+    // hold the listener bus: every round's convergence check must come
+    // back from its own job, not from an event queued behind the stall
     @volatile var hold = true
     val stall = new org.apache.spark.sql.util.QueryExecutionListener {
       private def pause(): Unit = {
@@ -745,20 +745,12 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
       override def onFailure(f: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = pause()
     }
-    val prevWait = Dedup.observedMetricWait
     spark.listenerManager.register(stall)
-    Dedup.observedMetricWait = scala.concurrent.duration.Duration.Zero
-    val fallback = try {
-      val g = groups()
-      assert(Dedup.lastResolveFallbacks > 0,
-        "the zero wait should have forced the synchronous count")
-      g
-    } finally {
-      Dedup.observedMetricWait = prevWait
+    val stalled = try groups() finally {
       hold = false
       spark.listenerManager.unregister(stall)
     }
-    assert(fallback == normal)
+    assert(stalled == normal)
     assert(normal(40L) == 1L && normal(110L) == 100L)
   }
 
@@ -1232,8 +1224,10 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     val rows = (0 until 500).map(i =>
       (s"g${r.nextInt(5)}", i.toLong * 7 + r.nextInt(3), r.nextInt(40).toLong))
     val df = rows.toDF("g", "k", "v").dropDuplicates("g", "k")
-    val got = graft.ops.Pack.prefixSumBy(df, "g", "k", "v", buckets = 8)
-      .select("g", "k", "prev_cumsum")
+    val out = graft.ops.Pack.prefixSumBy(df, "g", "k", "v", buckets = 8)
+    // no internal column leaks: the input's columns plus prev_cumsum
+    assert(out.columns.toSeq == df.columns.toSeq :+ "prev_cumsum")
+    val got = out.select("g", "k", "prev_cumsum")
     val want = df.withColumn("prev_cumsum",
       coalesce(sum("v").over(Window.partitionBy("g").orderBy("k")
         .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))

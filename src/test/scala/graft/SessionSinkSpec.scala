@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.etl.{Decode, Pcap}
+import graft.etl.{Decode, Pcap, SessionBuilder, SessionStore}
 import graft.streaming.{SessionSink, StreamSessionize}
 
 class SessionSinkSpec extends AnyFunSuite with SparkSpecBase {
@@ -52,6 +52,51 @@ class SessionSinkSpec extends AnyFunSuite with SparkSpecBase {
     assert(docs.nonEmpty)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     docs.foreach(r => assert(mapper.readTree(r.getString(0)).has("source")))
+  }
+
+  test("streaming parquet sink lands the UTC day SessionStore.write lands") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // 2023-11-14T22:13:20Z is already 2023-11-15 at UTC+14
+    val base = 1700000000L * 1000000L
+    def pkt(i: Int, src: Boolean): Decode.DecodedPacket =
+      Decode.DecodedPacket("s", i, base + i * 1000L, i.toLong * 100, 70, 54,
+        "aa:aa:aa:aa:aa:01", "ff:ff:ff:ff:ff:ff", 17,
+        if (src) "1.1.1.1" else "2.2.2.2", if (src) "2.2.2.2" else "1.1.1.1",
+        if (src) 1234 else 53, if (src) 53 else 1234,
+        0, 0, 0L, 0L, Array.emptyByteArray,
+        prevTsMicros = base + math.max(0, i - 1) * 1000L, l4Offset = 42)
+    val packets = Seq(pkt(0, src = true), pkt(1, src = false), pkt(2, src = true))
+    val tmp = java.nio.file.Files.createTempDirectory("sinkday").toString
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Pacific/Kiritimati")
+    try {
+      val input = MemoryStream[Decode.DecodedPacket]
+      val q = SessionSink.toParquet(StreamSessionize.sessions(input.toDS()),
+        s"$tmp/stream", s"$tmp/cp", Trigger.ProcessingTime("0 seconds"))
+      try {
+        input.addData(packets)
+        q.processAllAvailable()
+        // a far-future dummy fires the event-time timeout
+        val late = packets.last.copy(tsMicros = base + 1000L * 1000000L,
+          srcIp = "203.0.113.99", srcPort = 1)
+        input.addData(Seq(late))
+        q.processAllAvailable()
+        input.addData(Seq(late.copy(tsMicros = late.tsMicros + 1)))
+        q.processAllAvailable()
+      } finally q.stop()
+      val rows = SessionBuilder.buildSessions(
+        SessionBuilder.sessionKey(packets.head), packets.iterator, "test").toSeq
+      SessionStore.write(rows.toDS(), s"$tmp/batch")
+      def days(path: String): Set[(String, String)] = spark.read.parquet(path)
+        .filter(col("srcIp") =!= "203.0.113.99")
+        .select(col("sessionId"), col("day").cast("string"))
+        .as[(String, String)].collect().toSet
+      val batch = days(s"$tmp/batch")
+      assert(batch == Set((rows.head.sessionId, "2023-11-14")))
+      assert(days(s"$tmp/stream") == batch)
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
   }
 
   test("live _bulk HTTP sink posts action/doc ndjson and retries 429") {
