@@ -272,35 +272,46 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
+    // Janino compiles: one per generated class the codegen cache missed,
+    // so a warmed query that still compiles churns the cache
+    // (Sessions.CodegenCacheEntries).
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val timedQueries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(q => fixtureOnly(q._1))
-    def sweep(): Map[String, (Double, Long)] =
+    def sweep(): Map[String, (Double, Long, Long)] =
       timedQueries.map { case (name, fn) =>
         val gc0 = gcMillis()
+        val c0 = compiles()
         val t0 = System.nanoTime()
         // a thrown query is NaN, never a (fast) time of its exception path
         val sec =
           try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
           catch { case _: Throwable => Double.NaN }
-        name -> ((sec, gcMillis() - gc0))
+        name -> ((sec, gcMillis() - gc0, compiles() - c0))
       }.toMap
     val sweeps = Seq(sweep(), sweep())
     val timings = timedQueries.map { case (name, _) =>
       val samples = sweeps.map(_(name))
       Timing(name, samples.map(_._1), samples.map(_._2))
     }
-    // The sidecar holds the unabridged line plus every raw pass and its
-    // GC delta, so an outlier can be adjudicated from the file itself.
+    // The sidecar holds the unabridged line plus every raw pass with its
+    // GC and codegen-compile deltas, so an outlier can be adjudicated
+    // from the file itself.
     val full = {
       def arr[T](xs: Seq[T], fmt: T => String): String =
         xs.map(fmt).mkString("[", ",", "]")
       val detail = timings.map { t =>
         "\"" + t.name + "\":{\"sec\":" +
           arr[Double](t.passesSec, v => if (v.isNaN) "null" else f"$v%.3f") +
-          ",\"gc_ms\":" + arr[Long](t.gcMs, _.toString) + "}"
+          ",\"gc_ms\":" + arr[Long](t.gcMs, _.toString) +
+          ",\"codegen_compiles\":" +
+          arr[Long](sweeps.map(_(t.name)._3), _.toString) + "}"
       }.mkString("{", ",", "}")
+      val sweepCompiles = arr[Long](sweeps.map(_.values.map(_._3).sum), _.toString)
       benchLine(timings, heapLatency, rocksdbLatency, sfDir, Int.MaxValue)
-        .dropRight(1) + s""","passes":$detail}"""
+        .dropRight(1) +
+        s""","codegen_compiles_per_sweep":$sweepCompiles,"passes":$detail}"""
     }
     try {
       val w = new java.io.PrintWriter("bench_full.json")

@@ -30,9 +30,23 @@ object Tables {
 
 /** Single place for SparkSession defaults shared by Verify/Bench/tests. */
 object Sessions {
+  /** Entries of Spark's generated-code cache (a static conf, default 100).
+    * The cache is an LRU, and cyclic access over more classes than it
+    * holds misses on every access: one perfbench `operators` pass (8
+    * queries) cycles through ~235 generated classes and one sweep of the
+    * 138 `SparkEntry` queries at sf0.01 through ~2,345, so at 100 every
+    * warmed pass recompiled all of them in Janino and re-warmed the JIT.
+    * Measured on 4 vCPUs: warmed `operators` passes 235 → 18, 4, 0
+    * compiles and ~20% less process CPU; warmed sweeps ~3,180 → 284, 168
+    * compiles; metaspace after three sweeps 201 → 209 MB. 4096 is
+    * power-of-two headroom above the sweep.
+    */
+  val CodegenCacheEntries = 4096
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

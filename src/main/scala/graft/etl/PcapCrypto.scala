@@ -90,18 +90,6 @@ object PcapCrypto {
     c.doFinal(unhex(dekHex))
   }
 
-  /** Resolve a files-index row (`encoding`, hex `dek`, hex `iv`, KEK
-    * string from config) to ready-to-use keys. The stored IV is 12 bytes;
-    * the 4 counter bytes are appended zeroed (writer-simple.c:347-350).
-    */
-  def keysFor(encoding: String, dekHex: String, ivHex: String, kek: String): FileKeys =
-    encoding match {
-      case "normal" | null | "" => Normal
-      case enc =>
-        val iv16 = java.util.Arrays.copyOf(unhex(if (ivHex == null) "" else ivHex), 16)
-        FileKeys(enc, unwrapDek(dekHex, kek), iv16)
-    }
-
   /** AES-CTR keystream-XOR of `buf` as the bytes at absolute file offset
     * `pos`: counter = iv[12..16) treated as a big-endian uint32 holding
     * the block index pos/16 (pcap.js:140-143), plus a pos%16 intra-block

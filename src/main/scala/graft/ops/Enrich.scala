@@ -14,18 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Enrich {
 
-  /** I9: left-join a dimension table on an exact key, broadcast. */
-  def dimensionJoin(
-      facts: DataFrame, dim: DataFrame, factKey: Column, dimKey: Column,
-      take: Map[String, String]): DataFrame = {
-    val projected = dim.select(
-      (dimKey.as("_joinKey") +: take.toSeq.sortBy(_._1).map {
-        case (out, in) => col(in).as(out)
-      }): _*)
-    facts.join(broadcast(projected), factKey === col("_joinKey"), "left")
-      .drop("_joinKey")
-  }
-
   /** I9 (CIDR form): longest-prefix GeoIP-style lookup. The dim table has
     * (cidr, value) rows; facts join on prefix containment. Broadcast
     * nested-loop on the tiny dim side — at scale, pre-explode CIDRs into

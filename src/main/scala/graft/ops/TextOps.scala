@@ -31,12 +31,6 @@ object TextOps {
   def hex32(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long")
 
-  /** hex32 over an already-binary column: md5 hashes the bytes directly
-    * (a string cast would decode + re-encode the same UTF-8 bytes).
-    */
-  def hex32Bin(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
   /** First 63 bits of md5(s) as a long: bytes 0–7 with the top bit
     * cleared, i.e. `(hi32 & 0x7fffffff) * 2^32 + lo32`. Used for term
     * IDENTITY keys (postings, LM gram counts) where a 32-bit space would
@@ -193,18 +187,6 @@ object TextOps {
     */
   def fingerprint(text: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(tokens(text)))))
-
-  /** Rolling polynomial hash (Rabin-Karp) over tokens — Scala-side
-    * reference implementation used by winnowing-style chunk dedup; exact
-    * Column equivalent below keeps both paths in sync.
-    */
-  def rollingHashScala(toks: Seq[String], mod: Long = (1L << 31) - 1): Long =
-    toks.foldLeft(0L)((acc, t) =>
-      (acc * 31 + java.lang.Long.parseLong(
-        org.apache.commons.codec.digest.DigestUtils.md5Hex(t).substring(0, 8), 16)) % mod)
-
-  def rollingHash(toks: Column, mod: Long = (1L << 31) - 1): Column =
-    aggregate(toks, lit(0L), (acc, t) => (acc * 31 + hex32(t)) % mod)
 
   /** PII redaction rules, applied IN ORDER (order matters: SSN before
     * phone so `123-45-6789` isn't half-eaten by the phone rule; card

@@ -2291,16 +2291,4 @@ object Yara {
   /** Session form: scan both directions' reassembled streams. */
   def tags(rules: Seq[Rule], src: Array[Byte], dst: Array[Byte]): Seq[String] =
     (scan(rules, src) ++ scan(rules, dst)).distinct.sorted
-
-  /** Column form for at-scale tagging over payload columns. */
-  def tagsCol(rules: Seq[Rule]): (org.apache.spark.sql.Column,
-      org.apache.spark.sql.Column) => org.apache.spark.sql.Column = {
-    val u = org.apache.spark.sql.functions.udf {
-      (a: Array[Byte], b: Array[Byte]) =>
-        tags(rules,
-          if (a == null) Array.emptyByteArray else a,
-          if (b == null) Array.emptyByteArray else b)
-    }
-    (a, b) => u(a, b)
-  }
 }

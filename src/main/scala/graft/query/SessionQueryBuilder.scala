@@ -209,8 +209,19 @@ final case class SessionQueryBuilder(
     Endpoints.topTerms(narrowed.fieldFrame(field), col(field), field, k)
   }
 
-  def timeHistogram(intervalSec: Long, sums: Map[String, Column] = Map.empty): DataFrame =
+  /** E3. Without `intervalSec` the bucket width follows the query window
+    * the way the reference picks it (viewerUtils.js:66-134,
+    * [[Endpoints.autoInterval]]); an unbounded window gets 1 h, like the
+    * reference's all-time (`date=-1`) query.
+    */
+  def timeHistogram(intervalSec: Long = autoInterval,
+      sums: Map[String, Column] = Map.empty): DataFrame =
     Endpoints.timeHistogram(frame, timestamp_millis(histoCol), intervalSec, sums)
+
+  private def autoInterval: Long = (startMs, stopMs) match {
+    case (Some(s), Some(e)) => Endpoints.autoInterval(s / 1000, e / 1000)
+    case _                  => 3600L
+  }
 
   def unique(field: String, counts: Boolean = true): DataFrame =
     Endpoints.unique(fieldFrame(field), col(field), field, counts)
@@ -309,15 +320,5 @@ object QueryControl {
           totalTasks = stages.map(_.numTasks()).sum,
           completedTasks = stages.map(_.numCompletedTasks()).sum)
     }.sortBy(_.startMs)
-  }
-
-  /** POST /api/estasks/cancelall (apiStats.js:872): cancel every
-    * registered query's job group; returns how many were signalled.
-    */
-  def cancelAll(spark: org.apache.spark.sql.SparkSession): Int = {
-    import scala.jdk.CollectionConverters._
-    val ids = registry.keys().asScala.toSeq
-    ids.foreach(cancel(spark, _))
-    ids.length
   }
 }

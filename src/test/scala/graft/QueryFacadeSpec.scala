@@ -99,6 +99,27 @@ class QueryFacadeSpec extends AnyFunSuite with SparkSpecBase {
       s"bucket outside First-bounded window: ${ts.toSeq}")
   }
 
+  test("histogram without an interval takes the reference's auto interval") {
+    assert(Endpoints.autoInterval(0, 30 * 60 - 1) == 1)
+    assert(Endpoints.autoInterval(0, 30 * 60) == 60)
+    assert(Endpoints.autoInterval(0, 5L * 86400) == 60)
+    assert(Endpoints.autoInterval(0, 5L * 86400 + 1) == 3600)
+    val s = spark
+    import s.implicits._
+    val t0 = 1700000000000L
+    val frame = Seq(t0, t0 + 1500, t0 + 90000).map(t => (t, t))
+      .toDF("firstPacket", "lastPacket")
+    def buckets(window: Option[Long]): Long = {
+      val q = SessionQueryBuilder(frame, FieldRegistry.sessions)
+      window.fold(q)(w => q.timeRange(t0 - 1000, t0 - 1000 + w))
+        .timeHistogram().count()
+    }
+    assert(buckets(Some(600000L)) == 3)         // 1 s buckets
+    assert(buckets(Some(86400000L)) == 2)       // 60 s buckets
+    assert(buckets(Some(10 * 86400000L)) == 1)  // 1 h buckets
+    assert(buckets(None) == 1)                  // unbounded: 1 h
+  }
+
   test("empty list and bad ip-range values raise parse errors, not crashes") {
     import graft.expr.Compiler
     val c = new Compiler(FieldRegistry.sessions, FieldRegistry.sessionCol,
