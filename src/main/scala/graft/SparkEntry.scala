@@ -480,6 +480,7 @@ object SparkEntry {
           (count(lit(1)) % 3L).as("deltaESDroppedPerSec"))
         .withColumn("cluster", lit("c1"))
       graft.ops.Parliament.instantIssues(stats, nowSec = 1000000L)
+        .orderBy("cluster", "issue_type", "node")
     }),
     // E38 rollup: getStats' per-cluster aggregates (summed rates, live
     // node count, monitoring total) over the same synthetic snapshot
@@ -496,6 +497,7 @@ object SparkEntry {
           (count(lit(1)) % 7L).as("deltaTotalDroppedPerSec"),
           (count(lit(1)) % 2L).as("monitoring"))
       graft.ops.Parliament.clusterRollup(stats, nowSec = 1000000L)
+        .orderBy("cluster")
     }),
     "e8_unique_autocomplete" -> ((s, dir) =>
       Endpoints.unique(ev(s, dir), col("event_type"), "event_type",
@@ -658,7 +660,8 @@ object SparkEntry {
     // --- I4: sessionization (batch gaps-and-islands) ---------------------
     "i4_sessionize" -> ((s, dir) =>
       Sessionize.sessionize(ev(s, dir), col("user_id"), col("ts"),
-        col("event_id"), 1800, Map("sum_value" -> dsum(col("value"))))),
+        col("event_id"), 1800, Map("sum_value" -> dsum(col("value"))))
+        .orderBy("key", "session_seq")),
     // I16: suricata-plugin alert enrichment — out-of-band alerts (the
     // 'error' events) attached to the flow-session whose key+interval
     // covers them, via the bucketed interval equi-join
@@ -680,18 +683,22 @@ object SparkEntry {
 
     // --- D: deduplication ------------------------------------------------
     "d1_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(docs(s, dir), col("text"), col("doc_id"))),
+      Dedup.exact(docs(s, dir), col("text"), col("doc_id"))
+        .orderBy("content_hash")),
     "d2_dedup_minhash" -> ((s, dir) =>
       Dedup.minhashCandidates(docs(s, dir), col("text"), col("doc_id"))
         .orderBy("doc_a", "doc_b")),
     "d3_dedup_simhash" -> ((s, dir) =>
-      Dedup.simhash(docs(s, dir), col("text"), col("doc_id"))),
+      Dedup.simhash(docs(s, dir), col("text"), col("doc_id"))
+        .orderBy("doc_id")),
     "d4_ngram_jaccard" -> ((s, dir) =>
       Dedup.ngramJaccardPairs(docs(s, dir), col("text"), col("doc_id"),
-        docBlockKey, shingleK = 3, threshold = 0.5)),
+        docBlockKey, shingleK = 3, threshold = 0.5)
+        .orderBy("doc_a", "doc_b")),
     "d5_embedding_neardup" -> ((s, dir) =>
       Dedup.embeddingNearDup(emb(s, dir), col("embedding"), col("vec_id"),
-        col("label"), threshold = 0.4)),
+        col("label"), threshold = 0.4)
+        .orderBy("vec_a", "vec_b")),
     // D6: candidate pairs → connected components (canonical survivor per
     // dup chain, transitive closure the pair list alone can't express)
     "d6_dedup_groups" -> ((s, dir) =>
@@ -701,10 +708,12 @@ object SparkEntry {
     // D7: SemDeDup — near-dups within embedding-space centroid cells
     "d7_semantic_dedup" -> ((s, dir) =>
       Dedup.semanticNearDup(emb(s, dir), col("embedding"), col("vec_id"),
-        nCells = 8, threshold = 0.4)),
+        nCells = 8, threshold = 0.4)
+        .orderBy("vec_a", "vec_b")),
     // D8: winnowing fingerprints — substring-level dup candidates
     "d8_winnow" -> ((s, dir) =>
-      Dedup.winnowPairs(docs(s, dir), col("text"), col("doc_id"))),
+      Dedup.winnowPairs(docs(s, dir), col("text"), col("doc_id"))
+        .orderBy("doc_a", "doc_b")),
     // D9: benchmark decontamination — deterministic bench split (id%97),
     // k=3 so the synthetic corpus yields checkable overlap (prod: 8-13)
     "d9_contamination" -> ((s, dir) => {
@@ -716,20 +725,24 @@ object SparkEntry {
     }),
     // D20: soft dedup — 1/|cluster| ppm weights instead of removal
     "d20_soft_dedup" -> ((s, dir) =>
-      Dedup.softDedupWeights(docs(s, dir), col("text"), col("doc_id"))),
+      Dedup.softDedupWeights(docs(s, dir), col("text"), col("doc_id"))
+        .orderBy("doc_id")),
     // T20: curriculum phases by quality score + deterministic intra-phase
     // order (exact prefix-sum cuts over score values, no global window)
     "t20_curriculum" -> ((s, dir) =>
       Pack.curriculum(docs(s, dir), col("n_chars"), col("doc_id"),
-        nPhases = 4)),
+        nPhases = 4)
+        .orderBy("phase", "ord", "doc_id")),
     // P13: power-of-two length-class packing into fixed-shape bins
     "p13_class_pack" -> ((s, dir) =>
       Pack.classPack(docs(s, dir), col("doc_id"), col("n_chars"),
-        ctx = 2048, nShards = 8)),
+        ctx = 2048, nShards = 8)
+        .orderBy("cls", "shard", "bin", "slot")),
     // M5: perceptual dHash near-dup over the deterministic stub decode
     "m5_image_dhash" -> ((s, dir) =>
       Multimodal.dhashPairs(docs(s, dir), col("doc_id"), col("text"),
-        maxHamming = 16)),
+        maxHamming = 16)
+        .orderBy("doc_a", "doc_b")),
     // D17: decontamination removal — corpus minus docs sharing ≥2
     // trigram hashes with the held-out benchmark slice
     "d17_decontaminate" -> ((s, dir) => {
@@ -737,6 +750,7 @@ object SparkEntry {
       Dedup.decontaminate(
         d.filter(col("doc_id") % 97 =!= 0), d.filter(col("doc_id") % 97 === 0),
         col("text"), col("doc_id"), k = 3, minShared = 2)
+        .orderBy("doc_id")
     }),
     // S9: time-series pattern search — top-10 windows across all node
     // series closest to a 3-day spike shape (integer-cents distances)
@@ -751,7 +765,8 @@ object SparkEntry {
     }),
     // D19: estimated Jaccard (ppm) per LSH candidate pair
     "d19_minhash_estimates" -> ((s, dir) =>
-      Dedup.minhashEstimates(docs(s, dir), col("text"), col("doc_id"))),
+      Dedup.minhashEstimates(docs(s, dir), col("text"), col("doc_id"))
+        .orderBy("doc_a", "doc_b")),
     // D18: dup-cluster size histogram — the corpus-health stat every
     // dedup run reports (how many clusters of each size)
     "d18_dedup_stats" -> ((s, dir) => {
@@ -781,7 +796,8 @@ object SparkEntry {
     // corpus-duplicated 5-gram starts covering ≥ 8 tokens.
     "d12_exact_substring" -> ((s, dir) =>
       Dedup.sharedSpans(docs(s, dir), col("text"), col("doc_id"),
-        shingleK = 5, minSpan = 8)),
+        shingleK = 5, minSpan = 8)
+        .orderBy("doc_id", "span_start")),
     // D14: Bloom novelty — odd-id docs not (probably-)present in the
     // even-id half's membership filter. One broadcast bitset; probe side
     // never shuffles.
@@ -789,6 +805,7 @@ object SparkEntry {
       val d = docs(s, dir)
       Dedup.bloomNovel(d.filter(col("doc_id") % 2 === 0),
         d.filter(col("doc_id") % 2 === 1), col("text"), col("doc_id"))
+        .orderBy("doc_id")
     }),
 
     // --- S: similarity search -------------------------------------------
@@ -818,6 +835,7 @@ object SparkEntry {
         Similarity.bruteForceTopK(e, q, "embedding", "vec_id", k = 3),
         Similarity.lshTopK(e, q, "embedding", "vec_id", k = 3,
           planes = 8, dim = 64))
+        .orderBy("query_id")
     }),
     // S5: the full trained pipeline — kmeansFit codebook feeding ivfTopK
     "s5_ann_ivf_trained" -> ((s, dir) => {
@@ -837,6 +855,7 @@ object SparkEntry {
         dim = 64, m = 4, ksub = 4, iters = 2)
       Similarity.pqTopK(e, e.filter(col("vec_id") >= 5 && col("vec_id") < 10),
         "embedding", "vec_id", k = 3, dim = 64, m = 4, ksub = 4, cb)
+        .orderBy("query_id", "rk")
     }),
 
     // S7: the complete IVFADC pipeline — trained coarse quantizer routes
@@ -851,6 +870,7 @@ object SparkEntry {
       Similarity.ivfpqTopK(e, e.filter(col("vec_id") >= 5 && col("vec_id") < 10),
         "embedding", "vec_id", k = 3, dim = 64, m = 4, ksub = 4,
         coarse, nProbe = 2, cb)
+        .orderBy("query_id", "rk")
     }),
 
     // P7: cluster-balanced subsampling — train a k-means codebook, assign
@@ -901,7 +921,8 @@ object SparkEntry {
         .orderBy("doc_id")),
     // T16: the full Gopher keep/drop gate (integer-exact thresholds)
     "t16_gopher_gate" -> ((s, dir) =>
-      TextOps.gopherGate(docs(s, dir), col("text"), col("doc_id"))),
+      TextOps.gopherGate(docs(s, dir), col("text"), col("doc_id"))
+        .orderBy("doc_id")),
     // P11: per-source curation report — gate pass rates by source
     "p11_source_report" -> ((s, dir) => {
       val d = docs(s, dir)
@@ -916,7 +937,8 @@ object SparkEntry {
     }),
     // D16: cross-source shared-gram overlap matrix
     "d16_source_overlap" -> ((s, dir) =>
-      Dedup.sourceOverlap(docs(s, dir), col("text"), col("source"))),
+      Dedup.sourceOverlap(docs(s, dir), col("text"), col("source"))
+        .orderBy("src_a", "src_b")),
     // P12: mixture realization — weighted per-source token targets under
     // a global budget, deterministic seeded fill per source
     "p12_mixture_budget" -> ((s, dir) => {
@@ -926,11 +948,13 @@ object SparkEntry {
       Pack.mixtureSelect(withTok, col("source"), col("doc_id"), col("toks"),
         weights = Map("src0" -> 3L, "src1" -> 2L, "src2" -> 1L),
         budget = 3000L)
+        .orderBy("source", "doc_id")
     }),
     // T17: vocabulary coverage — OOV ppm against the corpus top-500 vocab
     "t17_oov_rate" -> ((s, dir) =>
       TextOps.oovRate(docs(s, dir), col("text"), col("doc_id"),
-        vocabSize = 500)),
+        vocabSize = 500)
+        .orderBy("doc_id")),
     // T18: word2vec skip-gram pair counts (window 2, corpus top-100)
     "t18_skipgram" -> ((s, dir) =>
       TextOps.skipgramPairs(docs(s, dir), col("text"), window = 2,
@@ -944,7 +968,8 @@ object SparkEntry {
     // T9: exact per-language token-count quantiles via value histogram
     "t9_length_quantiles" -> ((s, dir) =>
       TextOps.lengthQuantiles(docs(s, dir), col("text"), col("lang"))
-        .withColumnRenamed("grp", "lang")),
+        .withColumnRenamed("grp", "lang")
+        .orderBy("lang")),
     // T8: cross-document sequence packing — global prefix sum over the
     // id-ordered token stream, cut into fixed 128-token contexts
     "t8_seq_pack" -> ((s, dir) =>
@@ -956,7 +981,8 @@ object SparkEntry {
     // T21: WordPiece-style greedy longest-match encode over a
     // corpus-derived top-50 vocabulary (char fallback)
     "t21_wordpiece" -> ((s, dir) =>
-      TextOps.wordpieceStats(docs(s, dir), col("text"), col("doc_id"))),
+      TextOps.wordpieceStats(docs(s, dir), col("text"), col("doc_id"))
+        .orderBy("doc_id")),
     // S4: Lloyd's k-means codebook over the embedding column (the
     // training op behind ivfTopK's cells), emitted per component
     "s4_kmeans_centroids" -> ((s, dir) => {
@@ -993,6 +1019,7 @@ object SparkEntry {
       val groups = Dedup.resolveGroups(
         Dedup.minhashCandidates(d, col("text"), col("doc_id"), star = true))
       Pack.leakageSafeSplit(d, col("doc_id"), groups, validPermille = 100)
+        .orderBy("doc_id")
     }),
     // P6: DSIR importance scoring — target slice = English docs; top 200
     // most target-like docs from the whole pool (hashed-bigram models)
@@ -1007,6 +1034,7 @@ object SparkEntry {
       TextOps.scoreBuckets(
         lm.join(d.select(col("doc_id"), col("lang")), Seq("doc_id")),
         col("lang"), col("lm_score"), col("doc_id"))
+        .orderBy("doc_id")
     }),
     // P9: greedy token-budget selection by LM score (best docs until the
     // global budget is spent; exact distributed prefix sum)
@@ -1023,6 +1051,7 @@ object SparkEntry {
         (col("n_bigrams") + lit(1L)).as("toks"))
       Pack.tokenBudgetSelect(scored, col("doc_id"), col("lm_score"),
         col("toks"), budget = 12000L)
+        .orderBy("doc_id")
     }),
     // D14: URL-canonicalization dedup over synthesized crawl URLs (same
     // construction on both engines; tracking params / port / case /
@@ -1039,6 +1068,7 @@ object SparkEntry {
         when(col("doc_id") % 2 === 0, lit("#frag")).otherwise(lit("")))
       Dedup.urlDedup(d.select(col("doc_id"), url.as("url")),
         col("url"), col("doc_id"))
+        .orderBy("url")
     }),
     // P10: domain-blocklist filter (exact host + subdomain suffix match)
     "p10_domain_filter" -> ((s, dir) => {
@@ -1058,25 +1088,30 @@ object SparkEntry {
     // T23: Kneser-Ney smoothed bigram LM (proper discount +
     // continuation probability, exact integer ppm)
     "t23_kn_score" -> ((s, dir) =>
-      TextOps.knBigramScore(docs(s, dir), col("text"), col("doc_id"))),
+      TextOps.knBigramScore(docs(s, dir), col("text"), col("doc_id"))
+        .orderBy("doc_id")),
     // T12: corpus-level paragraph dedup (Dolma-style) — a paragraph
     // survives only at its first (doc, position) occurrence corpus-wide
     "t12_paragraph_dedup" -> ((s, dir) =>
       Dedup.paragraphDedup(docs(s, dir), docParas(col("text")),
-        col("doc_id"))),
+        col("doc_id"))
+        .orderBy("doc_id")),
     // T13: C4 line+document cleaning rules over synthesized line structure
     "t13_c4_clean" -> ((s, dir) =>
       TextOps.c4Clean(docs(s, dir), c4Lines(col("text"), col("doc_id")),
         col("doc_id"))
-        .withColumn("doc_kept", col("doc_kept").cast("long"))),
+        .withColumn("doc_kept", col("doc_kept").cast("long"))
+        .orderBy("doc_id")),
     // T14: corpus TF-IDF — top-5 terms per doc, integer-ppm idf
     "t14_tfidf" -> ((s, dir) =>
-      TextOps.tfidfTopTerms(docs(s, dir), col("text"), col("doc_id"), k = 5)),
+      TextOps.tfidfTopTerms(docs(s, dir), col("text"), col("doc_id"), k = 5)
+        .orderBy(col("doc_id"), col("tfidf").desc, col("term"))),
     // T15: NB-style classifier trained on the lang column, applied back
     // to the corpus (prediction + hit flag per doc)
     "t15_nb_classify" -> ((s, dir) =>
       TextOps.nbClassify(docs(s, dir), col("text"), col("doc_id"),
-        col("lang"))),
+        col("lang"))
+        .orderBy("doc_id")),
     // T22: BM25 top-5 retrieval — every 100th doc's leading 60 chars as
     // the query set against the full corpus, exact integer milli/ppm
     // scoring (broadcast query terms, bounded-heap per-query top-k)
@@ -1106,6 +1141,7 @@ object SparkEntry {
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           col("rk").cast("long").as("rk"))
       Similarity.rrfFuse(Seq(sparse, dense), kRrf = 60, topK = 10)
+        .orderBy("query_id", "rk")
     }),
     // T10: boilerplate strip — the corpus text wrapped in HTML chrome on
     // both engines, then stripped back down
@@ -1122,20 +1158,24 @@ object SparkEntry {
     // --- M: multimodal column plumbing (stubbed decode kernel) ----------
     "m1_multimodal_meta" -> ((s, dir) =>
       Multimodal.extractMeta(
-        Multimodal.asMedia(docs(s, dir), col("doc_id"), col("text"), "image"))),
+        Multimodal.asMedia(docs(s, dir), col("doc_id"), col("text"), "image"))
+        .orderBy("media_id")),
     "m2_frame_sample" -> ((s, dir) =>
       Multimodal.sampleFrames(
         Multimodal.asMedia(docs(s, dir), col("doc_id"), col("text"), "video"),
-        step = 7)),
+        step = 7)
+        .orderBy("media_id", "frame_idx")),
     "m3_resize_plan" -> ((s, dir) =>
       Multimodal.resizePlan(
         Multimodal.asMedia(docs(s, dir), col("doc_id"), col("text"), "image"),
-        maxDim = 256)),
+        maxDim = 256)
+        .orderBy("media_id")),
     // M4: audio chunk planning — 5 s windows, 4 s stride (1 s overlap)
     "m4_audio_chunks" -> ((s, dir) =>
       Multimodal.chunkAudio(
         Multimodal.asMedia(docs(s, dir), col("doc_id"), col("text"), "audio"),
-        winMs = 5000L, strideMs = 4000L)),
+        winMs = 5000L, strideMs = 4000L)
+        .orderBy("media_id", "chunk_idx")),
 
     // --- I1/I2/I4/I6-I8: pcap ETL (golden-tested; rows-only check here,
     //     DuckDB cannot read pcap) --------------------------------------

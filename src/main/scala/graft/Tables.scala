@@ -47,6 +47,16 @@ object Sessions {
     SparkSession.builder()
       .master(master)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Whole-stage classes carry their codegen stage id in the class name
+      // by default, and the ids of some plans (48 small aggregations in
+      // one union, the NB classifier) differ from run to run, so the same
+      // code misses the cache and compiles again. Measured on 4 vCPUs,
+      // three sweeps of the 138 queries at sf0.01: 2,346 / 276 / 120
+      // compiles with ids vs 1,769 / 8 / 0 without; e_fuzz_endpoints2
+      // 572 / 160 / 210 vs 347 / 0 / 0. The cost: a stack trace or a JFR
+      // no longer tells stages apart by class name. A runtime conf, so
+      // platform sessions (GraftExtensions) can set it too.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -26,7 +26,6 @@ object Dedup {
   def exact(df: DataFrame, content: Column, idCol: Column): DataFrame =
     df.groupBy(md5(content.cast("string")).as("content_hash"))
       .agg(min(idCol).as("keep_id"), count(lit(1)).as("n_docs"))
-      .orderBy(col("content_hash"))
 
   /** Universal-hash permutation family over a base hash h < 2^32:
     * perm_j(h) = (a_j·h + b_j) mod P. Pure 64-bit arithmetic, identical in
@@ -171,7 +170,7 @@ object Dedup {
       .select(explode(col("docs")).as("doc_a"), col("docs"))
       .select(col("doc_a"), explode(col("docs")).as("doc_b"))
       .filter(col("doc_a") < col("doc_b"))
-    vsOld.union(vsNew).distinct().orderBy("doc_a", "doc_b")
+    vsOld.union(vsNew).distinct()
   }
 
   /** Fold a batch's band rows into an existing band index (same bucket
@@ -238,7 +237,6 @@ object Dedup {
     df.filter(graft.functions.ShingleHashes.hasTokens(text))
       .select(idCol.as("doc_id"),
         graft.functions.ShingleHashes.simhashCol(text).as("simhash"))
-      .orderBy("doc_id")
 
   /** Blocked n-gram Jaccard near-dup pairs: candidate pairs share a
     * blocking key; similarity = |A∩B| / |A∪B| over distinct k-gram sets.
@@ -288,7 +286,6 @@ object Dedup {
         (col("sa") + col("sb") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Winnowing fingerprints (Schleimer et al., SIGMOD'03 — the MOSS
@@ -333,7 +330,6 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Resolve near-dup candidate pairs into connected components: every
@@ -474,7 +470,6 @@ object Dedup {
         Similarity.dotBin(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("cosine") >= threshold)
       .select("cell", "vec_a", "vec_b", "cosine")
-      .orderBy("vec_a", "vec_b")
   }
 
   /** Embedding near-dup pairs within a blocking key (label, LSH bucket, …):
@@ -522,7 +517,6 @@ object Dedup {
         Similarity.dotBin(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("cosine") >= threshold)
       .select("vec_a", "vec_b", "cosine")
-      .orderBy("vec_a", "vec_b")
     def packSide(src: DataFrame, keys: Seq[String],
         suffix: String): DataFrame =
       src.select((keys.map(col) :+ col("_vid").as(s"vec_$suffix") :+
@@ -628,7 +622,6 @@ object Dedup {
       .select("doc_id").distinct()
     corpus.select(idCol.as("doc_id"))
       .join(bad, Seq("doc_id"), "left_anti")
-      .orderBy("doc_id")
   }
 
   /** Exact-substring shared spans (Lee et al. 2022, "Deduplicating
@@ -667,7 +660,6 @@ object Dedup {
         (col("e") + shingleK - 1).cast("long").as("span_end"),
         (col("e") - col("s") + shingleK).cast("long").as("span_len"))
       .filter(col("span_len") >= minSpan)
-      .orderBy("doc_id", "span_start")
   }
 
   /** Remove the [[sharedSpans]] token ranges from each document — the
@@ -693,7 +685,6 @@ object Dedup {
             x => coalesce(!exists(col("spans"),
               sp => x("i") >= sp("s") && x("i") <= sp("e")), lit(true))),
           x => x("t")), " ").as("clean_text"))
-      .orderBy("doc_id")
   }
 
   /** Corpus-level paragraph dedup (the Dolma/RefinedWeb cleanup step):
@@ -736,7 +727,6 @@ object Dedup {
       .select(col("doc_id"), col("n_paras"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("clean_fp"), md5(lit(""))).as("clean_fp"))
-      .orderBy("doc_id")
   }
 
   /** D14: Bloom-filter novelty check of `probe` against `ref` — the
@@ -772,7 +762,6 @@ object Dedup {
       .crossJoin(broadcast(bits))
       .filter(!graft.functions.BloomBitset.allSet(col("bits"), col("ps")))
       .select("doc_id")
-      .orderBy("doc_id")
   }
 
   /** D15: URL-canonicalization dedup — the first dedup pass of every
@@ -791,7 +780,6 @@ object Dedup {
         idCol.cast("long").as("doc_id"))
       .groupBy("url")
       .agg(min("doc_id").as("keeper"), count(lit(1)).as("n_dups"))
-      .orderBy("url")
   }
 
   /** D19: estimated Jaccard per LSH candidate pair — the similarity
@@ -825,7 +813,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         eq.as("n_equal"),
         (eq * 1000000L / nh).cast("long").as("est_jaccard_ppm"))
-      .orderBy("doc_a", "doc_b")
   }
 
   /** D16: cross-source overlap matrix — the dataset-audit question "how
@@ -863,7 +850,6 @@ object Dedup {
       .withColumn("overlap_ppm",
         expr("(1000000 * shared_grams) div least(tot_a, tot_b)"))
       .select("src_a", "src_b", "shared_grams", "overlap_ppm")
-      .orderBy("src_a", "src_b")
   }
 
   /** D20: soft dedup — down-weight near-duplicate clusters instead of
@@ -893,6 +879,5 @@ object Dedup {
       .join(w, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("_w"), lit(1000000L)).cast("long").as("weight_ppm"))
-      .orderBy("doc_id")
   }
 }

@@ -119,7 +119,6 @@ object Multimodal {
       .select(col("media_id"), col("m.byte_len").as("byte_len"),
         col("m.width").as("width"), col("m.height").as("height"),
         col("m.n_frames").as("n_frames"))
-      .orderBy("media_id")
 
   /** Frame sampling: one row per sampled frame index (0, step, 2·step, …
     * below the stub-decoded n_frames). The explode happens scan-side —
@@ -135,7 +134,6 @@ object Multimodal {
       .select(col("media_id"), col("frame_idx").cast("long").as("frame_idx"),
         md5(concat(col("payload").cast("string"), lit("|"),
           col("frame_idx").cast("string"))).as("frame_fp"))
-      .orderBy("media_id", "frame_idx")
   }
 
   /** STUB audio decode, expression form (portable to SQL like
@@ -175,7 +173,6 @@ object Multimodal {
         least(lit(winMs), col("dur") - col("start_ms")).as("len_ms"),
         md5(concat(col("payload").cast("string"), lit("@"),
           col("start_ms").cast("string"))).as("chunk_fp"))
-      .orderBy("media_id", "chunk_idx")
   }
 
   /** Resize planning: aspect-preserving target dimensions bounding the
@@ -198,7 +195,6 @@ object Multimodal {
           .otherwise(greatest(lit(1),
             floor(col("height") * maxDim / col("long_side")).cast("int")))
           .as("out_h"))
-      .orderBy("media_id")
   }
 
   final case class ResizedRow(media_id: Long, format: String,
@@ -478,6 +474,5 @@ object Multimodal {
     CacheHooks.unpersistAfterFirstUse(sig)
     CacheHooks.unpersistAfterFirstUse(reps)
     nearEdges.unionByName(exactEdges)
-      .orderBy("doc_a", "doc_b")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Training-shard preparation operators: exact global prefix sums,
   * cross-document sequence packing, and deterministic seeded shuffles.
@@ -36,7 +37,9 @@ object Pack {
     * bucket membership without caching the shuffled data. Only the
     * bucket totals are collected (`buckets` rows); rows shuffle once
     * (hash on bucket id) and are scanned once, sorted within partitions
-    * by (bucket, key).
+    * by (bucket, key). The input is read three times (min/max, totals,
+    * the per-row pass), so the kernel persists it and releases it after
+    * the first action on the result.
     *
     * `orderCol` must be numeric and unique (a total order); `valueCol`
     * must be non-negative integers (token counts, byte sizes).
@@ -71,14 +74,26 @@ object Pack {
     * total, and no per-row group column) and [[prefixSumBy]].
     */
   private def prefixSumOver(
-      df: DataFrame,
+      input: DataFrame,
       groupCol: Option[String],
       orderCol: String,
       valueCol: String,
       buckets: Int): DataFrame = {
+    // persisted lazily: the upstream (a tokenizer, a scoring join) would
+    // otherwise run once per scan. A frame the caller cached stays the
+    // caller's to release.
+    val owned = input.storageLevel == StorageLevel.NONE
+    val df = if (owned) input.persist(StorageLevel.MEMORY_AND_DISK) else input
+    // the release hook goes in after the build-time actions (its id gate
+    // screens them out) and before the returned Dataset exists
+    def releaseAfterFirstUse(): Unit =
+      if (owned) CacheHooks.unpersistAfterFirstUse(df)
     val head = df.agg(
       min(col(orderCol).cast("long")), max(col(orderCol).cast("long"))).head()
-    if (head.isNullAt(0)) return df.withColumn("prev_cumsum", lit(0L))
+    if (head.isNullAt(0)) {
+      releaseAfterFirstUse()
+      return df.withColumn("prev_cumsum", lit(0L))
+    }
     val lo = head.getLong(0)
     val span = math.max(1L, (head.getLong(1) - lo) / buckets + 1)
     val bucketed = df
@@ -101,6 +116,7 @@ object Pack {
         val n = r.length
         ((if (group.isEmpty) "" else r.getString(0), r.getLong(n - 2)), r.getLong(n - 1))
       }
+    releaseAfterFirstUse()
     // per-group running offset across its buckets in key order
     val offsets: Map[(String, Long), Long] = totals
       .groupBy(_._1._1).toSeq
@@ -165,22 +181,13 @@ object Pack {
       .withColumn("okey", TextOps.hex32(
         concat_ws("|", lit(seed), col("doc_id").cast("string")))
         * lit(1L << 31) + col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val target = targets.foldLeft(lit(0L)) { case (acc, (s, t)) =>
       when(col("source") === s, lit(t)).otherwise(acc)
     }
-    val out = prefixSumBy(base, "source", "okey", "n_tokens")
+    prefixSumBy(base, "source", "okey", "n_tokens")
       .filter(col("prev_cumsum") < target)
       .select(col("source"), col("doc_id"), col("n_tokens"),
         col("prev_cumsum").as("cum_before"))
-      .orderBy("source", "doc_id")
-    // release after the returned plan's first action: the hook's
-    // execution-id gate ignores prefixSumBy's build-time actions
-    // (min/max head, totals collect) even if their async completion
-    // events arrive after registration; repeated calls in one session
-    // must not accumulate cached frames
-    CacheHooks.unpersistAfterFirstUse(base)
-    out
   }
 
   /** Cross-document sequence packing: documents are laid out in id order
@@ -193,20 +200,13 @@ object Pack {
     */
   def packSequences(
       df: DataFrame, text: Column, idCol: Column, ctxLen: Int): DataFrame = {
-    // persisted: prefixSum scans twice, and re-tokenizing the whole
-    // corpus for the second pass costs far more than caching 16 B/doc
     val base = df.select(
       idCol.cast("long").as("doc_id"),
       size(TextOps.tokens(text)).cast("long").as("n_tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = prefixSum(base, "doc_id", "n_tokens")
+    prefixSum(base, "doc_id", "n_tokens")
       .select(col("doc_id"), col("n_tokens"),
         (col("prev_cumsum") / ctxLen).cast("long").as("bin"),
         (col("prev_cumsum") % ctxLen).as("off_in_bin"))
-    // release after the first action on the result (the hook's id gate
-    // screens out prefixSum's build-time actions)
-    CacheHooks.unpersistAfterFirstUse(base)
-    out
   }
 
   /** Deterministic seeded global shuffle into `nShards` shards:
@@ -249,7 +249,6 @@ object Pack {
         when(pmod(h, lit(1000L)) < validPermille, lit("valid"))
           .otherwise(lit("train")))
       .select(col("doc_id"), col("split"))
-      .orderBy("doc_id")
   }
 
   /** Materialize the seeded shuffle as training shards on disk: one
@@ -299,27 +298,13 @@ object Pack {
     // okey ascends exactly as (score desc, doc_id asc): strictly-better
     // documents have strictly-smaller keys, so prev_cumsum = tokens of
     // all better documents.
-    //
-    // Persisted because prefixSum scans its input twice (bucket totals,
-    // then the per-row pass) and the scoring pipeline feeding this op is
-    // typically the expensive part (e.g. the bigram-LM joins) — without
-    // the persist it would execute twice. The projection is 4 longs per
-    // document (~32 B/row), so even a 100 TB corpus's keyed frame is a
-    // few hundred GB spread across the cluster — MEMORY_AND_DISK spills
-    // harmlessly.
     val keyed = base.withColumn("okey",
       (lit(maxScore) - least(greatest(col("score"), lit(0L)), lit(maxScore)))
         * lit(1L << 42) + col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = prefixSum(keyed, "okey", "n_tokens")
+    prefixSum(keyed, "okey", "n_tokens")
       .filter(col("prev_cumsum") < budget)
       .select(col("doc_id"), col("score"), col("n_tokens"),
         col("prev_cumsum").as("cum_before"))
-      .orderBy("doc_id")
-    // release after the first action on the result (the hook's id gate
-    // screens out prefixSum's build-time actions)
-    CacheHooks.unpersistAfterFirstUse(keyed)
-    out
   }
 
   /** T20: curriculum ordering — phase the corpus by a quality score
@@ -328,7 +313,8 @@ object Pack {
     * distributed prefix sum (docs-with-higher-score before each value),
     * so no window ever sees more rows than the score cardinality and
     * nothing is partition-less; the per-doc pass is one broadcast join
-    * + map-side hash. Output ordering key = (phase, ord, doc_id).
+    * + map-side hash. The training order is (phase, ord, doc_id); the
+    * rows come back unordered, for the consumer to sort or write by it.
     */
   def curriculum(
       df: DataFrame, scoreCol: Column, idCol: Column,
@@ -352,7 +338,6 @@ object Pack {
       concat_ws("|", lit(seed), col("doc_id").cast("string")))
     base.join(broadcast(cuts), Seq("score"))
       .select(col("doc_id"), col("score"), col("phase"), ord.as("ord"))
-      .orderBy("phase", "ord", "doc_id")
   }
 
   /** P13: length-class context packing — every document rounds up to the
@@ -391,6 +376,5 @@ object Pack {
       .withColumn("slot", expr(s"_rank % ($ctx div cls)"))
       .select(col("doc_id"), col("len"), col("cls"), col("shard"),
         col("bin"), col("slot"))
-      .orderBy("cls", "shard", "bin", "slot")
   }
 }

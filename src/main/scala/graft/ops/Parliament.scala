@@ -84,7 +84,6 @@ object Parliament {
         lit("noPackets").as("issue_type"), lit("red").as("severity"),
         col("deltaPacketsPerSec").cast("string").as("value_s"))
     ood.unionByName(dropped).unionByName(low)
-      .orderBy("cluster", "issue_type", "node")
   }
 
   /** The per-cluster rollup getStats computes alongside the issues:
@@ -101,7 +100,6 @@ object Parliament {
       sum(when(lit(nowSec) - col("currentTime") <= settings.outOfDateSec &&
         col("deltaPacketsPerSec") > 0, 1L).otherwise(0L)).as("liveNodes"),
       sum("monitoring").as("monitoring"))
-      .orderBy("cluster")
 
   // ---- tiny persisted issue registry (whole-rewrite parquet) ----------
 
@@ -151,7 +149,9 @@ object Parliament {
           else Nil
         red ++ down
       }
-    val instant = instantIssues(stats, nowSec, settings).collect()
+    // issue order decides the notifier's alert order
+    val instant = instantIssues(stats, nowSec, settings)
+      .orderBy("cluster", "issue_type", "node").collect()
       .map(r => (r.getString(0), r.getString(2), r.getString(1),
         r.getString(4))).toSeq
     // noPackets persistence: candidates must stay low for

@@ -49,6 +49,5 @@ object Sessionize {
       extraAggs.toSeq.sortBy(_._1).map { case (n, c) => c.as(n) }
     numbered.groupBy(col("_key").as("key"), col("_sid").as("session_seq"))
       .agg(aggs.head, aggs.tail: _*)
-      .orderBy(col("key"), col("session_seq"))
   }
 }

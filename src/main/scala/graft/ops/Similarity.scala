@@ -22,11 +22,6 @@ import graft.functions.TopK
   */
 object Similarity {
 
-  /** Per-query top-k of scored candidate rows via the bounded-heap
-    * aggregate; emits (query_id, neighbor_id, cosine, rk) in rank order —
-    * the exact rows `row_number over (partition by query_id order by
-    * cosine desc, neighbor_id)  <= k` would keep.
-    */
   /** S10: reciprocal-rank fusion of retrieval systems (Cormack et al.
     * 2009): fused(d) = Σ_systems 1/(k + rank_d), here in exact integer
     * ppm (`1000000 div (k + rk)`) so sparse (BM25) and dense (cosine)
@@ -52,7 +47,6 @@ object Similarity {
       .select(col("query_id"), posexplode(col("_top")).as(Seq("pos", "t")))
       .select(col("query_id"), (col("pos") + 1).cast("long").as("rk"),
         col("t.id").as("doc_id"), col("t.score").cast("long").as("rrf_ppm"))
-      .orderBy("query_id", "rk")
   }
 
   /** Per-query top-k by cosine as an unordered relation: the rank is
@@ -578,7 +572,6 @@ object Similarity {
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("query_id"), col("s.id").as("neighbor_id"),
         col("s.score").as("score"), (col("pos") + 1).as("rk"))
-      .orderBy("query_id", "rk")
   }
 
   def pqTopK(
@@ -660,6 +653,5 @@ object Similarity {
       .agg(count(lit(1)).as("n_exact"),
         sum(coalesce(col("m"), lit(0L))).as("hits"))
       .withColumn("recall_ppm", expr("(1000000 * hits) div n_exact"))
-      .orderBy("query_id")
   }
 }

@@ -75,26 +75,6 @@ object TextOps {
     "fr" -> Seq("le", "les", "des", "et", "est", "une"),
     "zh" -> Seq("shi", "bu", "wo", "ni", "ta", "men"))
 
-  def langScores(toks: Column): Seq[(String, Column)] =
-    langMarkers.map { case (lang, markers) =>
-      lang -> size(array_intersect(array_distinct(toks),
-        array(markers.map(lit): _*)))
-    }
-
-  /** argmax over langScores with ties resolved by list order. */
-  def langGuess(toks: Column): Column = {
-    val scores = langScores(toks)
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    scores.foldRight(lit("und")) { case ((lang, s), acc) =>
-      when(s === best && s > 0, lit(lang)).otherwise(acc)
-    }
-  }
-
-  /** Fused language-ID kernel: identical decision procedure to
-    * [[langGuess]] (distinct-token ∩ marker counts, first language in
-    * [[langMarkers]] order wins ties, "und" when all scores are 0), one
-    * JVM call per document instead of interpreted intersect lambdas.
-    */
   private val markerSets: Seq[(String, Set[String])] =
     langMarkers.map { case (l, ms) => l -> ms.toSet }
 
@@ -110,6 +90,10 @@ object TextOps {
     else scores.find(_._2 == best).get._1
   }
 
+  /** Fused language-ID kernel: per language, score = |distinct tokens ∩
+    * markers|; the first language in [[langMarkers]] order wins ties, and
+    * "und" when all scores are 0. One JVM call per document.
+    */
   def langGuessFused(text: Column): Column = {
     val f = udf((s: String) => langGuessScala(s))
     f(text)
@@ -307,7 +291,6 @@ object TextOps {
     }
     cum.groupBy(col("grp"))
       .agg(aggs.head, aggs.tail: _*)
-      .orderBy("grp")
   }
 
   /** One BPE merge-selection step: corpus-wide adjacent-token-pair
@@ -515,7 +498,7 @@ object TextOps {
     // but BEFORE the returned Dataset is constructed (see bigram note)
     CacheHooks.unpersistAfterFirstUse(big)
     CacheHooks.unpersistAfterFirstUse(types)
-    val out = big.join(c2, Seq("h2")).join(c1, Seq("h1"))
+    big.join(c2, Seq("h2")).join(c1, Seq("h1"))
       .join(u1, Seq("h1")).join(u2, Seq("hn"))
       .crossJoin(broadcast(bTot))
       .withColumn("p",
@@ -524,8 +507,6 @@ object TextOps {
       .groupBy("doc_id")
       .agg(expr("sum(p) div count(*)").as("kn_score"),
         count(lit(1)).as("n_bigrams"))
-      .orderBy("doc_id")
-    out
   }
 
   /** Apply a ranked merge table to a document — the ENCODE half of the
@@ -646,7 +627,6 @@ object TextOps {
       .select(col("doc_id"), col("n_lines"), col("n_kept"), col("doc_kept"),
         md5(array_join(coalesce(col("_kept"),
           array().cast("array<string>")), "\n")).as("clean_fp"))
-      .orderBy("doc_id")
   }
 
   /** T14: corpus TF-IDF, top-`k` highest-weighted terms per document.
@@ -682,7 +662,7 @@ object TextOps {
     val topkFn = graft.functions.TopK.stringIds(k)
     // before the returned Dataset exists (see bigramLikelihood)
     CacheHooks.unpersistAfterFirstUse(tf)
-    val out = tf.join(dfreq, Seq("term"))
+    tf.join(dfreq, Seq("term"))
       .crossJoin(broadcast(ndocs))
       .withColumn("tfidf", expr("tf * ((1000000 * n) div dfc)"))
       .groupBy("doc_id")
@@ -690,8 +670,6 @@ object TextOps {
       .select(col("doc_id"), explode(col("_top")).as("t"))
       .select(col("doc_id"), col("t.id").as("term"),
         col("t.score").cast("long").as("tfidf"))
-      .orderBy(col("doc_id"), col("tfidf").desc, col("term"))
-    out
   }
 
   /** T22: BM25 top-k retrieval — queries against the document corpus
@@ -870,14 +848,12 @@ object TextOps {
       .crossJoin(broadcast(ndocs))
       .withColumn("score", expr("s + ((1000000 * cdocs) div n)"))
     val arg1 = graft.functions.TopK.stringIds(1)
-    val out = scored.groupBy("doc_id")
+    scored.groupBy("doc_id")
       .agg(arg1(col("score").cast("double"), col("clazz")).as("_top"))
       .select(col("doc_id"), element_at(col("_top.id"), 1).as("pred"))
       .join(df.select(idCol.as("doc_id"), labelCol.as("label")),
         Seq("doc_id"))
       .withColumn("hit", (col("pred") === col("label")).cast("long"))
-      .orderBy("doc_id")
-    out
   }
 
   /** P8: CCNet-style head/middle/tail perplexity buckets (Wenzek et al.
@@ -923,7 +899,6 @@ object TextOps {
           .when(col("score") >= col("t_mid"), lit("middle"))
           .otherwise(lit("tail")))
       .select("doc_id", "grp", "score", "bucket")
-      .orderBy("doc_id")
   }
 
   /** Canonical URL form for web-corpus dedup: drop the fragment,
@@ -979,7 +954,6 @@ object TextOps {
         col("g.ok_len").as("ok_len"), col("g.ok_stop").as("ok_stop"),
         col("g.ok_alpha").as("ok_alpha"), col("g.ok_rep").as("ok_rep"),
         col("g.kept").as("kept"))
-      .orderBy("doc_id")
   }
 
   /** The T16 flags as ONE map-side struct column — shared by the batch
@@ -1051,7 +1025,6 @@ object TextOps {
       .agg(count(lit(1)).as("n_tokens"),
         expr("(1000000 * sum(CASE WHEN in_v IS NULL THEN 1 ELSE 0 END))" +
           " div count(*)").as("oov_ppm"))
-      .orderBy("doc_id")
   }
 
   /** T18: skip-gram (center, context) pair counts — the word2vec
@@ -1151,6 +1124,5 @@ object TextOps {
         .as("n_tokens"),
       when(n === 0, lit(0L)).otherwise(scan.getField("nfall"))
         .as("n_char_fallbacks"))
-      .orderBy("doc_id")
   }
 }

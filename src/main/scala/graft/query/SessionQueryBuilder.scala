@@ -88,26 +88,30 @@ final case class SessionQueryBuilder(
         s"User time limit ($tl hours) exceeded")
   }
 
-  /** The compiled expression+forced predicate (None = no expression),
-    * shared by [[frame]] and [[buildQuery]] so the transparency surface
-    * can never diverge from the query it describes.
+  /** The full compiled predicate — time bounding + expression + forced
+    * ACL (None = unbounded, no expression). [[frame]] applies it and
+    * [[buildQuery]] renders it, so the transparency surface can never
+    * diverge from the query it describes.
     */
-  private def exprPred: Option[Column] = (expressionStr, forcedStr) match {
-    case (Some(e), f)    => Some(compiler.compileWithForced(e, f))
-    case (None, Some(f)) => Some(compiler.compile(f))
-    case (None, None)    => None
+  private def pred: Option[Column] = {
+    val exprPred = (expressionStr, forcedStr) match {
+      case (Some(e), f)    => Some(compiler.compileWithForced(e, f))
+      case (None, Some(f)) => Some(compiler.compile(f))
+      case (None, None)    => None
+    }
+    (startMs, stopMs) match {
+      case (Some(s), Some(e)) =>
+        Some(Endpoints.sessionQueryPred(col(firstCol), col(lastCol),
+          col(dbTimeCol.getOrElse(lastCol)), lit(s), lit(e), bounding,
+          exprPred))
+      case _ => exprPred
+    }
   }
 
   /** The bounded, filtered session frame all endpoints run over. */
   def frame: DataFrame = {
     enforceTimeLimit()
-    (startMs, stopMs) match {
-      case (Some(s), Some(e)) =>
-        Endpoints.sessionQuery(sessions, col(firstCol), col(lastCol),
-          col(dbTimeCol.getOrElse(lastCol)), lit(s), lit(e), bounding,
-          exprPred)
-      case _ => exprPred.map(sessions.filter).getOrElse(sessions)
-    }
+    pred.map(sessions.filter).getOrElse(sessions)
   }
 
   /** E49 `/api/buildquery` (apiSessions.js:1578-1603 getQuery): the
@@ -123,13 +127,6 @@ final case class SessionQueryBuilder(
     */
   def buildQuery(fields: Seq[String] = Nil): SessionQueryBuilder.BuiltQuery = {
     enforceTimeLimit()
-    val pred: Option[Column] = (startMs, stopMs) match {
-      case (Some(s), Some(e)) =>
-        Some(Endpoints.sessionQueryPred(col(firstCol), col(lastCol),
-          col(dbTimeCol.getOrElse(lastCol)), lit(s), lit(e), bounding,
-          exprPred))
-      case _ => exprPred
-    }
     val days = (startMs, stopMs) match {
       case (Some(s), Some(e)) if e >= s =>
         val d0 = java.time.Instant.ofEpochMilli(s)

@@ -20,6 +20,12 @@ class CodegenCacheSpec extends AnyFunSuite with SparkSpecBase {
       Sessions.CodegenCacheEntries)
   }
 
+  test("Sessions.builder keeps stage ids out of generated class names") {
+    // with ids in the names, a plan whose stage ids vary between runs
+    // compiles the same code again on every run
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+  }
+
   test("a second round of 150 distinct generated classes compiles nothing") {
     // the multiplier is inlined into the generated source, so each query
     // is its own class; at 100 entries the LRU misses on all 150 every

@@ -177,7 +177,8 @@ class ParliamentSpec extends AnyFunSuite with SparkSpecBase {
       .toDF("cluster", "nodeName", "currentTime", "deltaPacketsPerSec",
         "deltaESDroppedPerSec", "deltaBytesPerSec",
         "deltaTotalDroppedPerSec", "monitoring")
-    val got = Parliament.clusterRollup(stats, nowSec).collect()
+    val got = Parliament.clusterRollup(stats, nowSec).orderBy("cluster")
+      .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
     assert(got.toSeq == Seq(("c1", 1500L, 5L, 1L, 2L), ("c2", 70L, 1L, 1L, 0L)))

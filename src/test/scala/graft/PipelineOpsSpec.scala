@@ -197,7 +197,8 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
       (1L, "apple banana banana"), (2L, "banana cherry"),
       (3L, "banana date")).toDF("doc_id", "text")
     val top = TextOps.tfidfTopTerms(d, col("text"), col("doc_id"), k = 2)
-      .filter(col("doc_id") === 1).select("term").as[String].collect()
+      .filter(col("doc_id") === 1).orderBy(col("tfidf").desc, col("term"))
+      .select("term").as[String].collect()
     // 'apple' df=1 beats 'banana' df=3 even at tf 1 vs 2:
     // 1*(3e6/1) > 2*(1e6/1... 3e6/3=1e6 → 2e6)
     assert(top.head == "apple")
@@ -228,7 +229,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     val sys1 = Seq((1L, 10L, 1L), (1L, 11L, 2L)).toDF("query_id", "doc_id", "rk")
     val sys2 = Seq((1L, 10L, 2L), (1L, 12L, 1L)).toDF("query_id", "doc_id", "rk")
     val fused = Similarity.rrfFuse(Seq(sys1, sys2), kRrf = 60, topK = 10)
-      .collect()
+      .orderBy("query_id", "rk").collect()
     // doc 10: 1e6/61 + 1e6/62 = 16393+16129=32522; doc 12: 16393; doc 11: 16129
     assert(fused.map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq ==
       Seq((1L, 10L, 32522L), (2L, 12L, 16393L), (3L, 11L, 16129L)))
@@ -257,7 +258,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
       (4L, "cc cc dd", "y"), (5L, "cc dd dd", "y"), (6L, "dd dd dd", "y"))
       .toDF("doc_id", "text", "lang")
     def run() = TextOps.nbClassify(d, col("text"), col("doc_id"), col("lang"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     // the (class, term) model join must give bit-identical predictions
     // whether AQE broadcasts it or shuffles it (forced here by disabling
     // auto-broadcast) — the 100 TB fallback path
@@ -270,7 +271,8 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     // every term above has df >= 2, so a minDf=2 cut is a no-op —
     // pins that the cut keeps boundary terms (df == minDf)
     val cut = TextOps.nbClassify(d, col("text"), col("doc_id"), col("lang"),
-      minDf = 2).collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      minDf = 2).orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(cut == broadcastRes)
     // singleton terms drop from the model: with 'zz' appearing once, a
     // minDf=2 model treats it as unseen but still classifies doc 7 by
@@ -329,7 +331,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
       (3L, "twelve thirteen fourteen fifteen sixteen seventeen")
     ).toDF("doc_id", "text")
     val spans = Dedup.sharedSpans(df, col("text"), col("doc_id"),
-      shingleK = 5, minSpan = 8).collect()
+      shingleK = 5, minSpan = 8).orderBy("doc_id", "span_start").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // doc 1: boiler covers tokens 4..13; duplicated 5-gram starts 4..9
     // doc 2: boiler covers tokens 5..14; starts 5..10; doc 3: nothing
@@ -358,7 +360,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     import spark.implicits._
     val df = Seq((1L, "a b"), (2L, "a b"), (3L, "a c")).toDF("doc_id", "text")
     val r = TextOps.knBigramScore(df, col("text"), col("doc_id"))
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
+      .orderBy("doc_id").collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
     // histories: c(a·)=3; c12: ab=2 ac=1; types (a,b),(a,c): u1(a)=2,
     // u2(b)=u2(c)=1, B=2; D=0.75 carried ×4:
     //  ab: (1e6·max(8−3,0))//12 + ((750000·2)//3 · (1e6·1)//2)//1e6
@@ -867,6 +869,32 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     assert(neg == Map(-1000L -> 0L, 0L -> 1L, 999999L -> 3L))
   }
 
+  test("prefixSum releases the cache it made, never one the caller made") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.QueryExecution
+    val mine = (0L until 100L).map(i => (i, 1L)).toDF("id", "v").persist()
+    mine.count()
+    try {
+      val out = graft.ops.Pack.prefixSum(mine, "id", "v", buckets = 4)
+      // registered after any release hook of the kernel, so it hears the
+      // completion of the count below after that hook has
+      val after = spark.range(0).queryExecution.id
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          if (qe.id > after) done.countDown()
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+          if (qe.id > after) done.countDown()
+      }
+      spark.listenerManager.register(l)
+      try {
+        assert(out.count() == 100)
+        assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.listenerManager.unregister(l)
+      assert(mine.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally mine.unpersist()
+  }
+
   test("packSequences bins are contiguous and offsets stay below ctxLen") {
     val p = graft.ops.Pack.packSequences(docs, col("text"), col("doc_id"), 128)
       .orderBy("doc_id").collect()
@@ -975,7 +1003,8 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
       (0 until ksub).maxBy(c => (subDot(v, j, cb(j)(c)), -c))
     val out = Similarity.pqTopK(emb, emb.filter(col("vec_id") === 5L),
       "embedding", "vec_id", k = 3, dim, m, ksub, cb)
-      .collect().map(r => (r.getLong(1), r.getDouble(2)))
+      .orderBy("query_id", "rk").collect()
+      .map(r => (r.getLong(1), r.getDouble(2)))
     val q = vecs(5L)
     out.foreach { case (nid, score) =>
       val expected = (0 until m).map(j => subDot(q, j, cb(j)(code(vecs(nid), j)))).sum
@@ -997,7 +1026,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
       (4L, Seq.empty[String])
     ).toDF("doc_id", "paras")
     val out = Dedup.paragraphDedup(d, col("paras"), col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     assert(out.map(t => (t._1, t._2, t._3)).toSeq ==
       Seq((1L, 3L, 3L), (2L, 2L, 1L), (3L, 2L, 0L), (4L, 0L, 0L)))
     // doc 2 reassembles to just "delta"; doc 3 to the empty string
@@ -1022,7 +1051,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
       (5L, Seq.empty[String])
     ).toDF("doc_id", "lines")
     val out = TextOps.c4Clean(d, col("lines"), col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     assert(out.toSeq == Seq(
       (1L, 3L, 3L, true),
       (2L, 4L, 1L, false),   // only the last line survives
@@ -1393,9 +1422,10 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
   test("classPack: slots bounded by ctx/class, assignment deterministic") {
     import spark.implicits._
     val d = (1L to 300L).map(i => (i, (i % 500) + 1)).toDF("doc_id", "len")
+    val order = Seq("cls", "shard", "bin", "slot").map(col)
     val out = graft.ops.Pack.classPack(d, col("doc_id"), col("len"),
       ctx = 1024, nShards = 4)
-    val rows = out.collect()
+    val rows = out.orderBy(order: _*).collect()
     assert(rows.length == 300)
     rows.foreach { r =>
       val (len, cls, slot) = (r.getLong(1), r.getLong(2), r.getLong(5))
@@ -1403,7 +1433,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
       assert(slot < 1024 / cls)
     }
     val again = graft.ops.Pack.classPack(d, col("doc_id"), col("len"),
-      ctx = 1024, nShards = 4).collect()
+      ctx = 1024, nShards = 4).orderBy(order: _*).collect()
     assert(rows.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
   }
 
@@ -1428,7 +1458,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpecBase {
     import spark.implicits._
     val d = Seq((1L, "spark sparkly zz"), (2L, "qqq")).toDF("doc_id", "text")
     val out = TextOps.wordpieceStats(d, col("text"), col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // vocab = {spark, sparkly, zz, qqq}; doc 1 encodes as
     // [spark][ ][sparkly][ ][zz] — 5 tokens, 2 single-char fallbacks
     assert(out.toSeq == Seq((1L, 5L, 2L), (2L, 1L, 0L)))

@@ -242,6 +242,51 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpecBase {
     assert(ds.count() > 0)
   }
 
+  test("library operators return unordered relations: no global sort") {
+    // row order is the caller's decision (SparkEntry sorts each result);
+    // an operator ending in orderBy would add a range shuffle and a sort
+    // to every caller that re-aggregates, joins or caches its output
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.ops.{Dedup, Multimodal, Pack, Parliament, Sessionize,
+      Similarity}
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "a b c d"), (2L, "a b c d"), (3L, "e f g h"))
+      .toDF("doc_id", "text")
+    val ranks = Seq((0L, 1L, 1L), (0L, 2L, 2L), (1L, 3L, 1L))
+      .toDF("query_id", "doc_id", "rk")
+    val events = Seq((1L, 100L, 1L), (1L, 200L, 2L), (2L, 5000L, 3L))
+      .toDF("user_id", "t", "event_id")
+      .withColumn("ts", col("t").cast("timestamp"))
+    val stats = Seq(("c1", 990000L, 1L, 10L, 0L, 1L),
+        ("c2", 100L, 0L, 20L, 1L, 0L))
+      .toDF("cluster", "currentTime", "deltaPacketsPerSec",
+        "deltaBytesPerSec", "deltaTotalDroppedPerSec", "monitoring")
+    val ops = Seq(
+      "Dedup.exact" -> (() => Dedup.exact(docs, col("text"), col("doc_id"))),
+      "Dedup.simhash" -> (() =>
+        Dedup.simhash(docs, col("text"), col("doc_id"))),
+      "Multimodal.extractMeta" -> (() => Multimodal.extractMeta(
+        Multimodal.asMedia(docs, col("doc_id"), col("text"), "image"))),
+      "Similarity.rrfFuse" -> (() => Similarity.rrfFuse(Seq(ranks, ranks))),
+      "Pack.tokenBudgetSelect" -> (() => Pack.tokenBudgetSelect(
+        docs.withColumn("score", col("doc_id") * 10), col("doc_id"),
+        col("score"), lit(5L), budget = 8L)),
+      "Sessionize.sessionize" -> (() => Sessionize.sessionize(events,
+        col("user_id"), col("ts"), col("event_id"), 1800)),
+      "Parliament.clusterRollup" -> (() =>
+        Parliament.clusterRollup(stats, nowSec = 1000000L)))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val sorted = ops.filter { case (_, op) =>
+        op().queryExecution.executedPlan.collect {
+          case x: org.apache.spark.sql.execution.SortExec if x.global => x
+        }.nonEmpty
+      }.map(_._1)
+      assert(sorted.isEmpty, s"operators ending in a global sort: $sorted")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("NO query plan contains a partition-less window (full sweep)") {
     // planning only — nothing executes; guards every current and future
     // driver-contract query against the single-task window anti-pattern
