@@ -261,10 +261,9 @@ object ShingleHashes {
   }
 
   /** Fused 32-bit SimHash over the token multiset — same semantics as
-    * Dedup.simhash32's composed form (and its SQL oracle): per-token
-    * hash = hex32(md5(token)); bit i of the fingerprint set iff
-    * Σ_tokens ((h>>i & 1)*2 - 1) > 0. One pass per document instead of
-    * 32 interpreted array-aggregates.
+    * its SQL oracle: per-token hash = hex32(md5(token)); bit i of the
+    * fingerprint set iff Σ_tokens ((h>>i & 1)*2 - 1) > 0. One pass per
+    * document instead of 32 interpreted array-aggregates.
     */
   def simhash32(text: String): Long = {
     if (text == null) return 0L

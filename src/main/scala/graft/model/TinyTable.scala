@@ -17,6 +17,12 @@ import org.apache.spark.sql.{Encoder, SparkSession}
   * than a full recursive delete + rename (the reference serializes
   * writers the same way with per-store mutexes, e.g.
   * viewer/apiShortcuts.js shortcutMutex).
+  *
+  * It is the only reader and writer of these tables: every store reads
+  * through [[read]] and writes through [[write]], so the swap protocol,
+  * its crash recovery and forward schema evolution live here alone. A
+  * store that read its parquet itself would answer an empty table
+  * during the crash window, and its next write would drop every row.
   */
 object TinyTable {
 

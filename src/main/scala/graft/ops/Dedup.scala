@@ -219,17 +219,6 @@ object Dedup {
     batch.join(dups, idCol === col("_dup_id"), "left_anti")
   }
 
-  /** 32-bit SimHash over the token multiset (portable hash family). */
-  def simhash32(toks: Column): Column = {
-    val hashes = transform(toks, t => hex32(t))
-    val fpBits = (0 until 32).map { i =>
-      val bitSum = aggregate(hashes, lit(0L),
-        (acc, h) => acc + (shiftright(h, i).bitwiseAND(lit(1L)) * 2 - 1))
-      when(bitSum > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    fpBits.reduce(_ + _)
-  }
-
   /** Per-doc simhash fingerprints (doc_id, simhash) — fused kernel, one
     * JVM call per document (see ShingleHashes.simhash32).
     */

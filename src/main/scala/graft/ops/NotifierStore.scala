@@ -64,12 +64,9 @@ object NotifierStore {
   def sanitizeName(name: String): String =
     name.replaceAll("[^-a-zA-Z0-9_: ]", "")
 
-  def readAll(spark: SparkSession, path: String): Seq[StoredNotifier] = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Nil
-    else spark.read.parquet(path).as[StoredNotifier].collect().toSeq
-  }
+  def readAll(spark: SparkSession, path: String): Seq[StoredNotifier] =
+    graft.model.TinyTable.read[StoredNotifier](spark, path)(
+      Encoders.product[StoredNotifier])
 
   private def writeAll(spark: SparkSession, path: String,
       rows: Seq[StoredNotifier]): Unit =

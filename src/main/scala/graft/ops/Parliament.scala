@@ -103,23 +103,16 @@ object Parliament {
 
   // ---- tiny persisted issue registry (whole-rewrite parquet) ----------
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   private def issuesPath(dir: String) = s"$dir/issues"
   private def marksPath(dir: String) = s"$dir/nopackets"
 
   def readIssues(spark: SparkSession, dir: String): Seq[Issue] =
-    if (!exists(spark, issuesPath(dir))) Nil
-    else spark.read.parquet(issuesPath(dir))
-      .as[Issue](Encoders.product[Issue]).collect().toSeq
+    graft.model.TinyTable.read[Issue](spark, issuesPath(dir))(
+      Encoders.product[Issue])
 
   private def readMarks(spark: SparkSession, dir: String): Seq[NoPacketsMark] =
-    if (!exists(spark, marksPath(dir))) Nil
-    else spark.read.parquet(marksPath(dir))
-      .as[NoPacketsMark](Encoders.product[NoPacketsMark]).collect().toSeq
+    graft.model.TinyTable.read[NoPacketsMark](spark, marksPath(dir))(
+      Encoders.product[NoPacketsMark])
 
   private def writeTable[T <: Product: org.apache.spark.sql.Encoder](
       spark: SparkSession, path: String, rows: Seq[T]): Unit =

@@ -259,9 +259,12 @@ object SessionQueryBuilder {
   * cancel plumbing (viewer/db.js:501 `cancelByOpaqueId` — every request
   * carries a cancel id; a cancel endpoint kills the running tasks).
   *
-  * Every action launched through [[QueryControl.run]] is tagged with a
-  * job group; [[QueryControl.cancel]] interrupts all its running stages
-  * cluster-wide.
+  * Every action launched through [[QueryControl.run]] carries the query
+  * id as a Spark job tag; [[QueryControl.cancel]] interrupts all its
+  * running stages cluster-wide. Tags add to whatever the caller set: an
+  * enclosing job group or tag stays in place, so a nested run's jobs
+  * carry the outer run's tag too and cancelling the outer run reaches
+  * them.
   */
 object QueryControl {
 
@@ -270,7 +273,7 @@ object QueryControl {
     * cancellable; the reference parses the user from the request's
     * `X-Opaque-Id: user::id` header — here it is carried explicitly).
     * Job/task progress comes from Spark's status tracker for this
-    * query's job group.
+    * query's job tag.
     */
   final case class TaskRow(taskId: String, action: String, user: String,
       startMs: Long, runningMs: Long, activeJobs: Int, totalTasks: Int,
@@ -279,20 +282,32 @@ object QueryControl {
   private val registry = new java.util.concurrent.ConcurrentHashMap[
     String, (String, String, Long)]() // queryId -> (action, user, startMs)
 
+  // the local properties run sets besides its tag (SparkContext's
+  // private SPARK_JOB_INTERRUPT_ON_CANCEL and SPARK_JOB_DESCRIPTION keys)
+  private val runProps = Seq("spark.job.interruptOnCancel",
+    "spark.job.description")
+
   def run[T](spark: org.apache.spark.sql.SparkSession, queryId: String,
       description: String, user: String = "")(body: => T): T = {
-    registry.put(queryId, (description, user, System.currentTimeMillis()))
-    spark.sparkContext.setJobGroup(queryId, description,
-      interruptOnCancel = true)
-    try body
-    finally {
-      spark.sparkContext.clearJobGroup()
+    val sc = spark.sparkContext
+    // first: Spark rejects an empty id or one with a comma as a tag, and
+    // that must throw before anything is registered
+    sc.addJobTag(queryId)
+    val saved = runProps.map(k => k -> sc.getLocalProperty(k))
+    try {
+      sc.setInterruptOnCancel(true)
+      sc.setJobDescription(description)
+      registry.put(queryId, (description, user, System.currentTimeMillis()))
+      body
+    } finally {
       registry.remove(queryId)
+      saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sc.removeJobTag(queryId)
     }
   }
 
   def cancel(spark: org.apache.spark.sql.SparkSession, queryId: String): Unit =
-    spark.sparkContext.cancelJobGroup(queryId)
+    spark.sparkContext.cancelJobsWithTag(queryId)
 
   /** GET /api/estasks (apiStats.js getESTasks): the running queries,
     * optionally filtered by a regex over action/user — driver-side
@@ -308,7 +323,7 @@ object QueryControl {
       case (id, (action, user, start))
           if re.forall(r => r.findFirstIn(action).isDefined ||
             r.findFirstIn(user).isDefined) =>
-        val jobs = st.getJobIdsForGroup(id)
+        val jobs = st.getJobIdsForTag(id)
         val stages = jobs.flatMap(j => st.getJobInfo(j))
           .flatMap(_.stageIds()).distinct
           .flatMap(s => st.getStageInfo(s))

@@ -47,16 +47,9 @@ object Shortcuts {
   def splitValues(value: String): Seq[String] =
     value.split("[,\n]").toSeq.map(_.trim).filter(_.nonEmpty)
 
-  def readAll(spark: SparkSession, path: String): Seq[Shortcut] = {
-    import spark.implicits._
-    if (!exists(spark, path)) Nil
-    else spark.read.parquet(path).as[Shortcut].collect().toSeq
-  }
-
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def readAll(spark: SparkSession, path: String): Seq[Shortcut] =
+    graft.model.TinyTable.read[Shortcut](spark, path)(
+      Encoders.product[Shortcut])
 
   private def writeAll(spark: SparkSession, path: String,
       rows: Seq[Shortcut]): Unit =

@@ -35,12 +35,8 @@ object ViewsStore {
   def sanitizeName(name: String): String =
     name.replaceAll("[^-a-zA-Z0-9_: ]", "")
 
-  def readAll(spark: SparkSession, path: String): Seq[View] = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Nil
-    else spark.read.parquet(path).as[View].collect().toSeq
-  }
+  def readAll(spark: SparkSession, path: String): Seq[View] =
+    graft.model.TinyTable.read[View](spark, path)(Encoders.product[View])
 
   private def writeAll(spark: SparkSession, path: String,
       rows: Seq[View]): Unit =

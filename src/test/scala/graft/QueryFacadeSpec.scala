@@ -312,4 +312,44 @@ class QueryFacadeSpec extends AnyFunSuite with SparkSpecBase {
     // the finished query drops out of the registry
     assert(QueryControl.tasks(spark).forall(_.taskId != qid))
   }
+
+  test("QueryControl tags jobs with the query id and leaves the caller's group and tags") {
+    import graft.query.QueryControl
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val sc = spark.sparkContext
+    val st = sc.statusTracker
+    def job(): Long = sc.parallelize(1 to 10, 2).count()
+    sc.setJobGroup("qc-caller-group", "caller")
+    sc.addJobTag("qc-caller-tag")
+    try {
+      QueryControl.run(spark, "qc-outer", "outer") {
+        job()
+        QueryControl.run(spark, "qc-inner", "inner")(job())
+        assert(sc.getJobTags().contains("qc-outer"),
+          "a nested run must leave the outer run's tag set")
+        job()
+      }
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "qc-caller-group")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(sc.getJobTags() == Set("qc-caller-tag"))
+      // an id Spark rejects as a tag throws before the body or registry
+      var ran = false
+      intercept[IllegalArgumentException](
+        QueryControl.run(spark, "qc,bad", "bad") { ran = true })
+      assert(!ran && QueryControl.tasks(spark).forall(_.taskId != "qc,bad"))
+      assert(sc.getJobTags() == Set("qc-caller-tag"))
+      // the status store fills from the listener bus, asynchronously
+      eventually(timeout(Span(20, Seconds))) {
+        val outer = st.getJobIdsForTag("qc-outer").toSet
+        val inner = st.getJobIdsForTag("qc-inner").toSet
+        assert(outer.size == 3 && inner.size == 1 && inner.subsetOf(outer))
+        assert(outer.subsetOf(st.getJobIdsForTag("qc-caller-tag").toSet))
+        assert(outer.subsetOf(st.getJobIdsForGroup("qc-caller-group").toSet))
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeJobTag("qc-caller-tag")
+    }
+  }
 }
