@@ -13,12 +13,20 @@ import org.apache.spark.sql.functions._
   *     before the shuffle;
   *   - top-K never collects more than K×shufflePartitions rows to the
   *     driver (`TakeOrderedAndProject`);
-  *   - `spigraph` does ONE pass (groupBy key×bucket + broadcast semi-join
-  *     against the top-K keys) instead of the reference's 2K-query msearch
-  *     fan-out (viewer/apiSessions.js:2024-2030);
+  *   - `spigraph` does ONE pass (groupBy key×bucket, top-K keys from that
+  *     aggregate, broadcast join back) instead of the reference's 2K-query
+  *     msearch fan-out (viewer/apiSessions.js:2024-2030);
   *   - `hierarchy` computes all levels from one grouped aggregate and
   *     takes per-prefix top-K with bounded-heap aggregates + broadcast
-  *     semi-joins — no ranking windows anywhere in the plan.
+  *     joins — no ranking windows anywhere in the plan.
+  *
+  * Filtering an aggregate by keys derived from that same aggregate uses
+  * an INNER broadcast join against a right side unique on the join keys,
+  * never a `left_semi`: Catalyst pushes a semi join below the aggregate
+  * (PushDownLeftSemiAntiJoin), so each branch re-scans and re-aggregates
+  * the store. No rule pushes an inner join below an Aggregate, so every
+  * branch keeps the same grouped subtree, AQE reuses its exchange
+  * (`ReusedExchange`) and the store is scanned once.
   */
 object Endpoints {
 
@@ -144,8 +152,13 @@ object Endpoints {
       .limit(k)
 
   /** E6: spigraph — per-value time histogram for the top-K values of a
-    * field. Single aggregation pass + broadcast semi-join with the top keys
-    * (the reference fans out one msearch per key).
+    * field. ONE grouped aggregate on (value, bucket) carries the metric
+    * and the session count; the top-K keys come from that aggregate (same
+    * `(cnt desc, value asc)` order as [[topTerms]]) and are inner-joined
+    * back broadcast. Inner, not semi: Catalyst pushes a semi join below
+    * the aggregate, and the store is then scanned once per branch; with
+    * the inner join it is scanned once. The reference fans out one
+    * msearch per key.
     */
   def spigraph(
       df: DataFrame,
@@ -155,14 +168,17 @@ object Endpoints {
       intervalSec: Long,
       k: Int,
       metric: Column = count(lit(1))): DataFrame = {
-    val top = topTerms(df, field, name, k).select(name)
-    val bucket = timeBucket(tsCol, intervalSec)
-    df.filter(field.isNotNull)
-      .withColumn(name, field)
-      .withColumn("bucket", bucket)
-      .join(broadcast(top), Seq(name), "left_semi")
-      .groupBy(col(name), col("bucket"))
-      .agg(metric.as("value"))
+    val grouped = df.filter(field.isNotNull)
+      .groupBy(field.as(name), timeBucket(tsCol, intervalSec).as("bucket"))
+      .agg(metric.as("value"), count(lit(1)).as("_cnt"))
+    // grouped by value: unique on `name`, so the inner join keeps exactly
+    // the rows a semi join would
+    val top = grouped.groupBy(col(name)).agg(sum("_cnt").as("_tot"))
+      .orderBy(col("_tot").desc, col(name).asc)
+      .limit(k)
+      .select(name)
+    grouped.join(broadcast(top), Seq(name))
+      .select(col(name), col("bucket"), col("value"))
       .orderBy(col(name), col("bucket"))
   }
 
@@ -170,15 +186,21 @@ object Endpoints {
     * requires non-null (the reference adds `exists` per level). One grouped
     * aggregate, then per-level top-K by pure aggregation — no windows.
     *
-    * Scale shape: after the level-0 semi-join only K prefixes survive, so a
+    * Scale shape: after the level-0 join only K prefixes survive, so a
     * prefix-partitioned ranking window would run on at most K tasks no
     * matter how many executors exist (and each task sorts every surviving
     * row of its prefix). Instead each level's top-K nodes come from the
     * bounded-heap aggregate ([[graft.functions.TopK]]): map-side partials
     * keep ≤K candidates per prefix per partition, the merged result is at
     * most K^(i+1) rows — always broadcastable — and survivors are kept with
-    * a broadcast semi-join. Ordering (total desc, value asc) is total, so
+    * a broadcast join. Ordering (total desc, value asc) is total, so
     * the kept set is exactly the reference's dense_rank<=K set.
+    *
+    * The joins are inner, not semi: a semi join would be pushed below
+    * the grouped aggregate and the store scanned once per level. Each
+    * right side (top-K ids per prefix) is unique on its join keys, so the
+    * inner join keeps exactly the rows a semi join keeps, and the levels
+    * share one scan through a reused exchange.
     */
   def hierarchy(df: DataFrame, fields: Seq[String], k: Int): DataFrame = {
     val nonNull = fields.map(col(_).isNotNull).reduce(_ && _)
@@ -186,13 +208,14 @@ object Endpoints {
       .groupBy(fields.map(col): _*)
       .agg(count(lit(1)).as("cnt"))
     // Level 0 has no parent prefix: plain aggregate + TakeOrderedAndProject
-    // (the spigraph pattern), semi-joined back broadcast.
+    // (the spigraph pattern), joined back broadcast. top0 is grouped by
+    // the level-0 value, so it is unique on the join key.
     val top0 = grouped.groupBy(col(fields.head))
       .agg(sum("cnt").as("_tot0"))
       .orderBy(col("_tot0").desc, col(fields.head).asc)
       .limit(k)
       .select(fields.head)
-    var surv = grouped.join(broadcast(top0), Seq(fields.head), "left_semi")
+    var surv = grouped.join(broadcast(top0), Seq(fields.head))
     // Levels >= 1: node total = sum(cnt) over the level grouping; top-K of
     // the totals within each parent prefix via the bounded-heap aggregate;
     // keep descendants of surviving nodes. Filtering level by level is
@@ -228,7 +251,9 @@ object Endpoints {
         .select((prefixCols.map(col) :+
           col("_id").cast(totals.schema(fields(i)).dataType)
             .as(fields(i))): _*)
-      surv = surv.join(broadcast(topNodes), levelCols, "left_semi")
+      // unique on levelCols: the bounded-heap ids of one prefix are
+      // distinct, because `totals` holds one row per level node
+      surv = surv.join(broadcast(topNodes), levelCols)
     }
     surv.select((fields.map(col) :+ col("cnt")): _*)
       .orderBy(fields.map(col): _*)
@@ -320,14 +345,26 @@ object Endpoints {
       // (apiConnections.js:295-299 doProcess), so A⇄B gives each node
       // cnt 2, and a self-loop counts twice. `links` is already one row
       // per directed pair, so the union counts exactly that.
-      val deg = links.select(col("src").as("node"))
-        .union(links.select(col("dst").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
+      // The count reads every aggregate column of `links`: column pruning
+      // would otherwise strip the aggregates this branch does not use, its
+      // aggregate would differ from `links`' and it would re-scan the
+      // store instead of reusing its exchange. CASE without ELSE keeps the
+      // value nullable, or NullPropagation turns the count into count(1)
+      // and the pruning happens anyway; cnt >= 1, so it is never null and
+      // the count is the link count.
+      val link = when(col("cnt") > 0,
+        struct(links.columns.drop(2).map(col): _*))
+      val deg = links.select(col("src").as("node"), link.as("_link"))
+        .union(links.select(col("dst").as("node"), link.as("_link")))
+        .groupBy("node").agg(count(col("_link")).as("deg"))
         .filter(col("deg") >= minConn)
         .select("node")
+      // inner, not semi, joins: `deg` is grouped by node, so each join
+      // keeps exactly the rows a semi join keeps, and `links` is not
+      // re-aggregated (a semi join is pushed below the aggregate)
       links
-        .join(broadcast(deg.withColumnRenamed("node", "src")), Seq("src"), "left_semi")
-        .join(broadcast(deg.withColumnRenamed("node", "dst")), Seq("dst"), "left_semi")
+        .join(broadcast(deg.withColumnRenamed("node", "src")), Seq("src"))
+        .join(broadcast(deg.withColumnRenamed("node", "dst")), Seq("dst"))
         .select(("src" +: "dst" +: "cnt" +: sums.keys.toSeq.sorted).map(col): _*)
         .orderBy(col("src"), col("dst"))
     }

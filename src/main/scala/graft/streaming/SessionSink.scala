@@ -11,8 +11,9 @@ import graft.ops.Enrich
   * (capture/db.c:472-1100: per-thread buffers, flush ≤ dbFlushTimeout 5 s)
   * as Structured Streaming micro-batches.
   *
-  *   - parquet sink: day-partitioned append (same layout as
-  *     etl.SessionStore, readable mid-stream);
+  *   - parquet sink: day-partitioned append (same layout and writer
+  *     options as etl.SessionStore, so live files carry the sessionId
+  *     bloom filter; readable mid-stream);
   *   - ES-bulk sink: foreachBatch serializing to the nested ES document
   *     shape as ndjson files — swap the writer lambda for an HTTP _bulk
   *     client against a live cluster; the 5-second trigger mirrors the
@@ -22,8 +23,16 @@ object SessionSink {
 
   def toParquet(sessions: Dataset[SessionRow], path: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    sessions.toDF()
+      trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
+    // the file stream sink takes its writer's Hadoop conf from the
+    // session's SQL conf when start() creates it and ignores Hadoop keys
+    // given as stream options, so the store's writer options are set on
+    // the session for the start() call only
+    val conf = sessions.sparkSession.conf
+    val opts = graft.etl.SessionStore.bloomOpts
+    val prev = opts.keys.map(k => k -> conf.getOption(k))
+    opts.foreach { case (k, v) => conf.set(k, v) }
+    try sessions.toDF()
       .withColumn("day", graft.etl.SessionStore.utcDay(col("firstPacket")))
       .writeStream
       .format("parquet")
@@ -33,6 +42,8 @@ object SessionSink {
       .trigger(trigger)
       .outputMode("append")
       .start()
+    finally prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
 
   /** Live `_bulk` HTTP sink: each partition serializes its rows to
     * action+doc ndjson and POSTs chunks of at most `maxBulkBytes` — the

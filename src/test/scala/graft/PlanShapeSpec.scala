@@ -41,9 +41,46 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpecBase {
     assert(p.contains("TakeOrderedAndProject(limit=30, offset=10"))
   }
 
-  test("spigraph semi-joins against broadcast top keys") {
-    val p = plan("e6_spigraph")
-    assert(p.contains("LeftSemi") && p.contains("BroadcastHashJoin"))
+  // Walks the adaptive root and its query stages, which a plain
+  // TreeNode.collect does not enter.
+  private object Aqe
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  // Endpoints that filter an aggregate by keys derived from it: a semi
+  // join is pushed below the aggregate and re-scans the store per branch;
+  // the broadcast inner join keeps ONE scan whose exchange AQE reuses.
+  // Checked on the final AQE plan, after collect().
+  private def assertOneScan(name: String,
+      q: => org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    spark.catalog.clearCache()
+    val df = q
+    assert(df.collect().nonEmpty, name)
+    val p = df.queryExecution.executedPlan
+    def count(f: PartialFunction[SparkPlan, SparkPlan]) = Aqe.collect(p)(f).size
+    assert(count { case s: FileSourceScanExec => s } == 1,
+      s"$name must scan the store once:\n$p")
+    assert(count { case r: ReusedExchangeExec => r } >= 1,
+      s"$name must reuse the grouped exchange:\n$p")
+    assert(count { case j: BroadcastHashJoinExec => j } >= 1, s"$name:\n$p")
+    assert(count { case w: WindowExec => w } == 0, s"$name:\n$p")
+  }
+
+  test("spigraph joins broadcast top keys and scans the store once") {
+    assertOneScan("e6_spigraph", SparkEntry.queries("e6_spigraph")(spark, sf))
+  }
+
+  test("connections minConn joins the degree set and scans the store once") {
+    import org.apache.spark.sql.functions.{col, sum}
+    for (sums <- Seq(Map.empty[String, org.apache.spark.sql.Column],
+        Map("sum_value" -> sum(col("value")))))
+      assertOneScan(s"connections minConn=2 sums=${sums.keys}",
+        graft.ops.Endpoints.connectionsLinks(Tables.load(spark, sf, "events"),
+          col("user_id").cast("string"), col("event_type"), sums,
+          minConn = 2))
   }
 
   // A Window with an empty partition spec ships every row to ONE task —
@@ -68,16 +105,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpecBase {
 
   test("hierarchy plan has no window at all") {
     // levels >= 1 rank via bounded-heap top-K aggregates + broadcast
-    // semi-joins; a prefix-partitioned window would cap parallelism at K
-    // tasks after the level-0 semi-join.
-    spark.catalog.clearCache()
-    val p = SparkEntry.queries("e7_hierarchy")(spark, sf)
-      .queryExecution.executedPlan
-    val windows = p.collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec => w
-    }
-    assert(windows.isEmpty)
-    assert(p.toString.contains("LeftSemi"))
+    // joins; a prefix-partitioned window would cap parallelism at K
+    // tasks after the level-0 join. All levels share one scan.
+    assertOneScan("e7_hierarchy", SparkEntry.queries("e7_hierarchy")(spark, sf))
   }
 
   test("ANN top-k plans have no window at all") {

@@ -99,6 +99,41 @@ class SessionSinkSpec extends AnyFunSuite with SparkSpecBase {
     } finally spark.conf.set("spark.sql.session.timeZone", zone)
   }
 
+  test("streaming parquet sink writes the store's sessionId bloom filter") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val base = 1700000000L * 1000000L
+    // 40 in-test sessions: one DNS-shaped UDP packet per flow
+    val rows = (0 until 40).flatMap { i =>
+      val p = Decode.DecodedPacket("s", i, base + i * 1000L, i.toLong * 100,
+        70, 54, "aa:aa:aa:aa:aa:01", "ff:ff:ff:ff:ff:ff", 17,
+        s"10.0.0.$i", "2.2.2.2", 1024 + i, 53, 0, 0, 0L, 0L,
+        Array.emptyByteArray, prevTsMicros = base + i * 1000L, l4Offset = 42)
+      SessionBuilder.buildSessions(SessionBuilder.sessionKey(p),
+        Iterator(p), "test")
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("sinkbloom").toString
+    val input = MemoryStream[SessionBuilder.SessionRow]
+    val q = SessionSink.toParquet(input.toDS(), s"$tmp/stream", s"$tmp/cp",
+      Trigger.ProcessingTime("0 seconds"))
+    try {
+      input.addData(rows)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(graft.etl.SessionStore.bloomOpts.keys
+      .forall(spark.conf.getOption(_).isEmpty), "session conf left changed")
+    assert(spark.read.parquet(s"$tmp/stream").count() == rows.size)
+    val blooms = StoreFooters.sessionIdBloomLengths(spark, s"$tmp/stream")
+    assert(blooms.nonEmpty)
+    // the store's adaptive filter: present in every row group, a 64 KiB
+    // bitset plus header, not the 1 MiB a fixed-size filter puts into
+    // every micro-batch file
+    blooms.foreach { case (f, lens) =>
+      assert(lens.nonEmpty && lens.forall(l => l > 0 && l <= 65 * 1024),
+        s"$f: sessionId bloom filter lengths $lens")
+    }
+  }
+
   test("live _bulk HTTP sink posts action/doc ndjson and retries 429") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

@@ -51,6 +51,47 @@ class StoreAndCidrSpec extends AnyFunSuite with SparkSpecBase {
     } finally footer.close()
   }
 
+  test("store layout: every file has a right-sized sessionId bloom filter") {
+    // in-test capture: 400 one-packet UDP flows, one session each
+    import java.nio.{ByteBuffer, ByteOrder}
+    val nFlows = 400
+    val dir = java.nio.file.Files.createTempDirectory("sessions-layout")
+    val cap = dir.resolve("flows.pcap")
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(graft.etl.Pcap.classicHeader(1, 65535))
+    for (i <- 0 until nFlows) {
+      val data = ByteBuffer.allocate(14 + 20 + 8 + 16)
+      data.position(12); data.putShort(0x0800.toShort)
+      data.put(0x45.toByte).put(0.toByte).putShort((20 + 8 + 16).toShort)
+      data.putShort(i.toShort).putShort(0.toShort)
+      data.put(64.toByte).put(17.toByte).putShort(0.toShort)
+      data.putInt(0x0a000000 | i).putInt(0xc0a80001)
+      data.putShort((1024 + i).toShort).putShort(53.toShort)
+      data.putShort((8 + 16).toShort).putShort(0.toShort)
+      val rec = ByteBuffer.allocate(16 + data.capacity)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      rec.putInt(1700000000 + i).putInt(0)
+        .putInt(data.capacity).putInt(data.capacity).put(data.array())
+      out.write(rec.array())
+    }
+    java.nio.file.Files.write(cap, out.toByteArray)
+    val path = dir.resolve("store").toString
+    SessionStore.write(SessionBuilder.sessionize(spark, cap.toString), path)
+    val blooms = StoreFooters.sessionIdBloomLengths(spark, path)
+    assert(blooms.nonEmpty)
+    // sized by the row group's distinct ids, not parquet's 1 MiB cap: a
+    // 64 KiB bitset (the smallest adaptive candidate) plus its header
+    blooms.foreach { case (f, lens) =>
+      assert(lens.nonEmpty && lens.forall(l => l > 0 && l <= 65 * 1024),
+        s"$f: sessionId bloom filter lengths $lens")
+    }
+    val store = SessionStore.read(spark, path)
+    assert(store.count() == nFlows)
+    val id = store.select("sessionId").head().getString(0)
+    assert(store.filter(col("sessionId") === id).count() == 1)
+    assert(store.filter(col("sessionId") === "absent-session-id").count() == 0)
+  }
+
   test("expire drops only day partitions older than the retention window") {
     val sessions = SessionBuilder.sessionizeRef(spark,
       "/root/reference/tests/pcap/socks-http-example.pcap")
