@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution._
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange._
+import org.apache.spark.sql.execution.joins._
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Physical-plan census over every driver-contract query: counts the
   * plan features that matter at 100 TB (shuffles, join strategies,
@@ -11,9 +15,21 @@ import org.apache.spark.sql.execution.SparkPlan
   * The table makes plan regressions reviewable in diffs the same way
   * CORRECTNESS json makes result regressions reviewable — a query
   * suddenly gaining an exchange or losing a broadcast shows up as a
-  * one-line change.
+  * one-line change. It exits 1 on a partition-less window, or on a query
+  * that does not order its own result: below projections and codegen
+  * wrappers each plan must end in a global sort or TakeOrdered (one-row
+  * global aggregates and queries that fail to plan are exempt).
   */
 object PlanAudit {
+  private def ordered(p: SparkPlan): Boolean = p match {
+    case s: SortExec => s.global
+    case _: TakeOrderedAndProjectExec => true
+    case a: BaseAggregateExec => a.groupingExpressions.isEmpty
+    case _: ProjectExec | _: WholeStageCodegenExec | _: InputAdapter =>
+      ordered(p.children.head)
+    case _ => false
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
@@ -25,31 +41,25 @@ object PlanAudit {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    def count(p: SparkPlan)(f: SparkPlan => Boolean): Int =
-      p.collect { case n if f(n) => n }.size
-
+    val unordered = Seq.newBuilder[String]
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
         spark.catalog.clearCache()
         val plan = fn(spark, sfDir).queryExecution.executedPlan
-        val cls: SparkPlan => String = _.getClass.getSimpleName
-        val exch = count(plan)(cls(_).startsWith("ShuffleExchange"))
-        val bcast = count(plan)(cls(_).startsWith("BroadcastExchange"))
-        val smj = count(plan)(cls(_) == "SortMergeJoinExec")
-        val bhj = count(plan)(n => cls(n) == "BroadcastHashJoinExec" ||
-          cls(n) == "BroadcastNestedLoopJoinExec")
-        val winPartless = count(plan) {
-          case w: org.apache.spark.sql.execution.window.WindowExec =>
-            w.partitionSpec.isEmpty
-          case _ => false
-        }
-        val win = count(plan)(
-          _.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec])
-        val topk = count(plan)(cls(_) == "TakeOrderedAndProjectExec")
-        val sort = count(plan)(n => cls(n) == "SortExec" &&
-          n.asInstanceOf[org.apache.spark.sql.execution.SortExec].global)
-        Seq(name, exch.toString, bcast.toString, smj.toString, bhj.toString,
-          win.toString, winPartless.toString, topk.toString, sort.toString)
+        def count(f: PartialFunction[SparkPlan, Boolean]): String =
+          plan.collect { case n if f.applyOrElse(n, (_: SparkPlan) => false) =>
+            n }.size.toString
+        if (!ordered(plan)) unordered += name
+        Seq(name,
+          count { case _: ShuffleExchangeExec => true },
+          count { case _: BroadcastExchangeExec => true },
+          count { case _: SortMergeJoinExec => true },
+          count { case _: BroadcastHashJoinExec |
+            _: BroadcastNestedLoopJoinExec => true },
+          count { case _: WindowExec => true },
+          count { case w: WindowExec => w.partitionSpec.isEmpty },
+          count { case _: TakeOrderedAndProjectExec => true },
+          count { case s: SortExec => s.global })
       } catch {
         case e: Throwable =>
           Seq(name, "-", "-", "-", "-", "-", "-", "-",
@@ -70,11 +80,12 @@ object PlanAudit {
     val w = new java.io.PrintWriter(out, "UTF-8")
     try w.print(md.toString) finally w.close()
     println(s"wrote $out (${rows.length} queries)")
-    val offenders = rows.filter(r => r(6) != "0" && r(6) != "-")
-    if (offenders.nonEmpty) {
-      println("PARTITION-LESS WINDOWS: " + offenders.map(_.head).mkString(", "))
-      sys.exit(1)
-    }
+    val offenders = Seq(
+      "PARTITION-LESS WINDOWS" ->
+        rows.filter(r => r(6) != "0" && r(6) != "-").map(_.head),
+      "UNORDERED RESULTS" -> unordered.result()).filter(_._2.nonEmpty)
+    offenders.foreach { case (what, qs) => println(s"$what: ${qs.mkString(", ")}") }
+    if (offenders.nonEmpty) sys.exit(1)
     spark.stop()
   }
 }

@@ -144,7 +144,7 @@ object SparkEntry {
     // Endpoint-kernel fuzz (differential): 24 seeded (interval, field,
     // top-k, filter) combos through ops/Endpoints vs an independent SQL
     // translation — sweeps interval snapping, top-k tie-breaks, and the
-    // spigraph semi-join across the parameter space the fixed e3/e5/e6
+    // spigraph top-key join across the parameter space the fixed e3/e5/e6
     // queries pin at one point each.
     "e_fuzz_endpoints" -> ((s, dir) => {
       import graft.query.EndpointFuzz
@@ -398,7 +398,8 @@ object SparkEntry {
         .withColumn("bucket_s", epochS(col("bucket"))).drop("bucket")
         .orderBy("bucket_s")),
     "e4_term_counts" -> ((s, dir) =>
-      Endpoints.termCounts(ev(s, dir), col("event_type"), "event_type")),
+      Endpoints.termCounts(ev(s, dir), col("event_type"), "event_type")
+        .orderBy(col("cnt").desc, col("event_type").asc)),
     "e5_spiview_top" -> ((s, dir) =>
       Endpoints.topTerms(ev(s, dir), col("user_id"), "user_id", 10)),
     "e6_spigraph" -> ((s, dir) =>
@@ -407,16 +408,18 @@ object SparkEntry {
         .withColumn("bucket_s", epochS(col("bucket"))).drop("bucket")
         .orderBy("event_type", "bucket_s")),
     "e7_hierarchy" -> ((s, dir) =>
-      Endpoints.hierarchy(ev(s, dir), Seq("event_type", "user_id"), 3)),
+      Endpoints.hierarchy(ev(s, dir), Seq("event_type", "user_id"), 3)
+        .orderBy("event_type", "user_id")),
     "e8_unique" -> ((s, dir) =>
       Endpoints.unique(ev(s, dir), col("user_id"), "user_id")),
     "e9_multiunique" -> ((s, dir) =>
       Endpoints.multiunique(ev(s, dir), Seq("event_type", "user_id"))),
     "e10_connections" -> ((s, dir) =>
       Endpoints.connectionsLinks(ev(s, dir), col("user_id"), col("event_type"),
-        Map("sum_value" -> dsum(col("value"))))),
+        Map("sum_value" -> dsum(col("value")))).orderBy("src", "dst")),
     "e5_spiview_multi" -> ((s, dir) =>
-      Endpoints.spiview(ev(s, dir), Seq("event_type", "user_id"), 5)),
+      Endpoints.spiview(ev(s, dir), Seq("event_type", "user_id"), 5)
+        .orderBy("field", "rk")),
     "e15_federation" -> ((s, dir) => {
       val e = ev(s, dir)
       // two "clusters" = disjoint halves; federate, then final agg/sort
@@ -457,6 +460,7 @@ object SparkEntry {
         startSec = 1704067200L, stopSec = 1706659200L,
         stepSec = 86400L, intervalSec = 60L)
         .withColumn("value", col("value").cast("long"))
+        .orderBy("node", "pos")
     }),
     "e16_node_stats" -> ((s, dir) =>
       Endpoints.nodeStats(
@@ -512,6 +516,7 @@ object SparkEntry {
       val cur = e.filter(col("ts") >= lit("2024-01-16 00:00:00").cast("timestamp"))
       val base = e.filter(col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"))
       Endpoints.connectionsNodes(cur, Some(base), col("user_id"), col("event_type"))
+        .orderBy("node")
     }),
     "e12_segment_join" -> ((s, dir) => {
       // rootId-style segment re-join: orders ⋈ lineitem, per-order rollup.

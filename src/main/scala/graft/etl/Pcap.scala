@@ -549,6 +549,15 @@ object Pcap {
     }
   }
 
+  /** The local path of a fileId, which [[readPackets]] renders with
+    * Hadoop's `Path` and a raw file name: `java.net.URI` would throw on a
+    * space or `[`, and decode `%20` or cut at `#` to another file.
+    */
+  def localPath(fileId: String): String =
+    if (fileId.startsWith("file:"))
+      new org.apache.hadoop.fs.Path(fileId).toUri.getPath
+    else fileId
+
   /** Read a directory (or single file) of pcaps as a packet Dataset,
     * with per-chunk IPv4 fragment reassembly.
     *

@@ -1377,16 +1377,7 @@ object SessionBuilder {
           seg.length >= 2)
           out += "truncated-pcap"
         // filenameOps: tags=/gre-(.*)\.pcap%gretest-\1; tags=dns-error%error-dns
-        fileIds.map { f =>
-          // raw paths with spaces are not legal URIs — fall back to the
-          // string form instead of an unchecked URISyntaxException
-          val p = if (f.startsWith("file:"))
-            try new java.net.URI(f).getPath catch {
-              case _: java.net.URISyntaxException => f.stripPrefix("file:")
-            }
-          else f
-          new java.io.File(p).getName
-        }
+        fileIds.map(f => new java.io.File(Pcap.localPath(f)).getName)
           .foreach { n =>
             "^gre-(.*)\\.pcap$".r.findFirstMatchIn(n)
               .foreach(m => out += s"gretest-${m.group(1)}")

@@ -157,9 +157,9 @@ object SessionStore {
 
   /** Store inspection — the `/api/esindices` analogue (reference:
     * viewer/apiStats.js index listing: per-index docs/bytes/time-range/
-    * health). One row per day partition with file count, byte size, row
-    * count and the firstPacket time range, assembled ENTIRELY from
-    * filesystem listings and parquet footers — no data page is read.
+    * health). One unordered row per day partition with file count, byte
+    * size, row count and the firstPacket time range, assembled ENTIRELY
+    * from filesystem listings and parquet footers — no data page is read.
     * The driver does one listing per day directory (metadata-only); the
     * footer opens — one RPC per file, the actual latency — run as a
     * distributed job over the file list, so a 100 TB store with a few
@@ -188,7 +188,7 @@ object SessionStore {
       -- files.map(_._1)).toSeq
       .map(PartitionInfo(_, 0L, 0L, 0L, -1L, -1L, bucketed = false))
     if (files.isEmpty)
-      return spark.createDataFrame(emptyDays.sortBy(_.day))
+      return spark.createDataFrame(emptyDays)
     val sconf = new Pcap.SerializableConf(conf)
     val slots = math.max(1,
       math.min(files.size, spark.sparkContext.defaultParallelism * 4))
@@ -240,8 +240,8 @@ object SessionStore {
         when(col("maxFp") === Long.MinValue, -1L).otherwise(col("maxFp"))
           .as("maxFirstPacket"),
         (col("allBucketed") === 1).as("bucketed"))
-    (if (emptyDays.isEmpty) agg
-     else agg.unionByName(spark.createDataFrame(emptyDays))).orderBy("day")
+    if (emptyDays.isEmpty) agg
+    else agg.unionByName(spark.createDataFrame(emptyDays))
   }
 
   /** Targeted single-partition delete — the `DELETE /api/esindices/

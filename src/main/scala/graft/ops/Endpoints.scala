@@ -27,6 +27,10 @@ import org.apache.spark.sql.functions._
   * the store. No rule pushes an inner join below an Aggregate, so every
   * branch keeps the same grouped subtree, AQE reuses its exchange
   * (`ReusedExchange`) and the store is scanned once.
+  *
+  * Results are unordered relations; callers order them for display. The
+  * only sorts here choose rows: the top-K cuts by (count desc, value asc),
+  * the sessions table's paging and dstats' newest sample per cell.
   */
 object Endpoints {
 
@@ -113,10 +117,6 @@ object Endpoints {
     else 3600L
   }
 
-  /** E3: time histogram with per-bucket session count + metric sums.
-    * `tsCol` must be a timestamp column; bucket is emitted as `bucket`
-    * (timestamp, floor to `intervalSec`).
-    */
   /** Shared time bucket: floor `tsCol` to `intervalSec` — FLOOR, not
     * cast-truncation, so pre-1970 timestamps land in their own bucket
     * exactly like ES date_histogram (cast-to-long truncates toward zero
@@ -126,6 +126,10 @@ object Endpoints {
     timestamp_seconds(
       floor(unix_timestamp(tsCol) / intervalSec).cast("long") * intervalSec)
 
+  /** E3: time histogram with per-bucket session count + metric sums.
+    * `tsCol` must be a timestamp column; bucket is emitted as `bucket`
+    * (timestamp, floor to `intervalSec`).
+    */
   def timeHistogram(
       df: DataFrame,
       tsCol: Column,
@@ -134,13 +138,12 @@ object Endpoints {
     val bucket = timeBucket(tsCol, intervalSec).as("bucket")
     val aggs = (count(lit(1)).as("sessions") ::
       sums.toSeq.sortBy(_._1).map { case (n, c) => c.as(n) }.toList)
-    df.groupBy(bucket).agg(aggs.head, aggs.tail: _*).orderBy(col("bucket"))
+    df.groupBy(bucket).agg(aggs.head, aggs.tail: _*)
   }
 
   /** E4: geo facets — value counts of a (country-like) column. */
   def termCounts(df: DataFrame, field: Column, name: String): DataFrame =
     df.groupBy(field.as(name)).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col(name).asc)
 
   /** E5: spiview top-K values + counts for one field. Ties broken by value
     * so results are deterministic.
@@ -155,10 +158,8 @@ object Endpoints {
     * field. ONE grouped aggregate on (value, bucket) carries the metric
     * and the session count; the top-K keys come from that aggregate (same
     * `(cnt desc, value asc)` order as [[topTerms]]) and are inner-joined
-    * back broadcast. Inner, not semi: Catalyst pushes a semi join below
-    * the aggregate, and the store is then scanned once per branch; with
-    * the inner join it is scanned once. The reference fans out one
-    * msearch per key.
+    * back broadcast, so the store is scanned once. The reference fans
+    * out one msearch per key.
     */
   def spigraph(
       df: DataFrame,
@@ -179,7 +180,6 @@ object Endpoints {
       .select(name)
     grouped.join(broadcast(top), Seq(name))
       .select(col(name), col("bucket"), col("value"))
-      .orderBy(col(name), col("bucket"))
   }
 
   /** E7: spigraphhierarchy — nested top-K along a field path. Every level
@@ -194,13 +194,8 @@ object Endpoints {
     * keep ≤K candidates per prefix per partition, the merged result is at
     * most K^(i+1) rows — always broadcastable — and survivors are kept with
     * a broadcast join. Ordering (total desc, value asc) is total, so
-    * the kept set is exactly the reference's dense_rank<=K set.
-    *
-    * The joins are inner, not semi: a semi join would be pushed below
-    * the grouped aggregate and the store scanned once per level. Each
-    * right side (top-K ids per prefix) is unique on its join keys, so the
-    * inner join keeps exactly the rows a semi join keeps, and the levels
-    * share one scan through a reused exchange.
+    * the kept set is exactly the reference's dense_rank<=K set. The
+    * joins are inner, so the levels share one scan (see above).
     */
   def hierarchy(df: DataFrame, fields: Seq[String], k: Int): DataFrame = {
     val nonNull = fields.map(col(_).isNotNull).reduce(_ && _)
@@ -256,7 +251,6 @@ object Endpoints {
       surv = surv.join(broadcast(topNodes), levelCols)
     }
     surv.select((fields.map(col) :+ col("cnt")): _*)
-      .orderBy(fields.map(col): _*)
   }
 
   /** E8: unique values of a field (± counts). `autocompletePrefix` filters
@@ -338,7 +332,7 @@ object Endpoints {
       .groupBy(srcField.as("src"), dstField.as("dst"))
       .agg(count(lit(1)).as("cnt"),
         sums.toSeq.sortBy(_._1).map { case (n, c) => c.as(n) }: _*)
-    if (minConn <= 1) links.orderBy(col("src"), col("dst"))
+    if (minConn <= 1) links
     else {
       // node cnt = number of distinct DIRECTED links the node touches —
       // the reference bumps both endpoints once per new `src->dst` key
@@ -366,7 +360,6 @@ object Endpoints {
         .join(broadcast(deg.withColumnRenamed("node", "src")), Seq("src"))
         .join(broadcast(deg.withColumnRenamed("node", "dst")), Seq("dst"))
         .select(("src" +: "dst" +: "cnt" +: sums.keys.toSeq.sorted).map(col): _*)
-        .orderBy(col("src"), col("dst"))
     }
   }
 
@@ -386,15 +379,11 @@ object Endpoints {
         .groupBy("node").agg(count(lit(1)).as("sessions"))
         .withColumn("flag", lit(flag))
     val cur = nodes(current, 1)
-    baseline match {
-      case None => cur.orderBy("node")
-      case Some(b) =>
-        cur.unionByName(nodes(b, 2))
-          .groupBy("node")
-          .agg(sum(when(col("flag") === 1, col("sessions")).otherwise(0)).as("sessions"),
-            sum(col("flag")).cast("int").as("flag"))
-          .orderBy("node")
-    }
+    baseline.fold(cur)(b =>
+      cur.unionByName(nodes(b, 2))
+        .groupBy("node")
+        .agg(sum(when(col("flag") === 1, col("sessions")).otherwise(0)).as("sessions"),
+          sum(col("flag")).cast("int").as("flag")))
   }
 
   /** E11: CSV export of any endpoint result. */
@@ -435,13 +424,13 @@ object Endpoints {
       .select(col("field"), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col("field"), col("s.id").as("value"),
         col("s.score").cast("long").as("cnt"), (col("pos") + 1).as("rk"))
-      .orderBy("field", "rk")
   }
 
-  /** E15: multi-cluster federation — union per-cluster results and re-run
-    * the final aggregate/sort/limit (reference: viewer/multies.js:653-760
-    * combineResults/sortResults). Spark's partial/final aggregation does
-    * the merge natively once the frames are unioned by name.
+  /** E15: multi-cluster federation — union per-cluster frames by name
+    * (reference: viewer/multies.js:653-760 combineResults/sortResults).
+    * This only unions: the caller re-aggregates the union (and sorts or
+    * limits it) as e15 does, and Spark's partial/final aggregation does
+    * the merge natively.
     */
   def federate(clusters: Seq[DataFrame]): DataFrame =
     clusters.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -460,7 +449,6 @@ object Endpoints {
     val all = count(lit(1)).as("samples") :: sorted.toList
     metrics.groupBy(nodeCol.as("node"), bucket.as("bucket"))
       .agg(all.head, all.tail: _*)
-      .orderBy(col("node"), col("bucket"))
   }
 
   /** The `/api/dstats` derived-metric catalogue
@@ -537,7 +525,6 @@ object Endpoints {
       .crossJoin(spark_grid(num))
     grid.join(newest, Seq("node", "pos"), "left")
       .na.fill(0.0, Seq("value"))
-      .orderBy("node", "pos")
   }
 
   private def spark_grid(num: Int): DataFrame = {
@@ -558,10 +545,9 @@ object Endpoints {
     val agg = grid.groupBy(col("pos"))
       .agg(sum(col("value")).as("total"),
         countDistinct(col("node")).as("nodes"))
-    (if (average)
+    if (average)
       agg.select(col("pos"), (col("total") / col("nodes")).as("value"))
-    else agg.select(col("pos"), col("total").as("value")))
-      .orderBy("pos")
+    else agg.select(col("pos"), col("total").as("value"))
   }
 
   /** E17 convenience: record one query-audit entry through the REAL

@@ -42,8 +42,7 @@ object FilesTable {
       spark.sparkContext.hadoopConfiguration)
     val sizes = base.select(col("name")).distinct().as[String]
       .map { f =>
-        val p = new org.apache.hadoop.fs.Path(
-          if (f.startsWith("file:")) new java.net.URI(f).getPath else f)
+        val p = new org.apache.hadoop.fs.Path(f)
         val len =
           try p.getFileSystem(sconf.value).getFileStatus(p).getLen
           catch { case _: Exception => -1L }

@@ -3,10 +3,10 @@ package graft.ops
 /** The seek-only pcap fetch path shared by every consumer that resolves
   * stored `packetPos` references back to bytes — [[Hunt]]'s partition
   * scans and the interactive single-session endpoints ([[CyberChef]],
-  * [[BodyHash]]). One place owns path normalization (binaryFile `file:`
-  * URIs), blob open + global-header parse, per-file key resolution and
-  * the swallow-and-skip error policy, so a change to any of them (new
-  * store backend, new encryption encoding) lands everywhere at once.
+  * [[BodyHash]]). One place owns blob open ([[graft.etl.Pcap.localPath]])
+  * + global-header parse, per-file key resolution and the swallow-and-
+  * skip error policy, so a change to any of them (new store backend, new
+  * encryption encoding) lands everywhere at once.
   */
 private[ops] object PcapChannels {
 
@@ -21,10 +21,9 @@ private[ops] object PcapChannels {
   def channelOf(open: OpenMap, f0: String,
       keys: String => graft.etl.PcapCrypto.FileKeys,
       store: graft.etl.PcapStore.Store): Option[Chan] = {
-    val f = if (f0.startsWith("file:")) new java.net.URI(f0).getPath else f0
-    open.getOrElseUpdate(f, try {
+    open.getOrElseUpdate(f0, try {
       val k = keys(f0)
-      val blob = store.open(f)
+      val blob = store.open(graft.etl.Pcap.localPath(f0))
       val hdr = graft.etl.PcapCrypto.readSlice(blob, 0L, 24, k)
       graft.etl.Pcap.parseHeader(hdr).map((blob, _, k))
     } catch { case _: Exception => None })

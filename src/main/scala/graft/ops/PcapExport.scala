@@ -51,12 +51,10 @@ object PcapExport {
         Option(org.apache.spark.TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit](_ => open.values.flatten.foreach(r =>
             try r._1.close() catch { case _: Exception => () })))
-        def channelOf(f0: String) = {
-          val f = if (f0.startsWith("file:")) new java.net.URI(f0).getPath else f0
-          open.getOrElseUpdate(f,
-            try Some((store.open(f), keys(f0)))
+        def channelOf(f0: String) =
+          open.getOrElseUpdate(f0,
+            try Some((store.open(graft.etl.Pcap.localPath(f0)), keys(f0)))
             catch { case _: Exception => None })
-        }
         rows.flatMap { case (first, sid, seq, file, pos, len) =>
           channelOf(file).flatMap { case (raf, k) =>
             // exported records are always plaintext pcap, whatever the
@@ -86,8 +84,7 @@ object PcapExport {
       .collect()
     first.headOption.map { r =>
       val f0 = r.getString(1)
-      val f = if (f0.startsWith("file:")) new java.net.URI(f0).getPath else f0
-      val blob = store.open(f)
+      val blob = store.open(graft.etl.Pcap.localPath(f0))
       try graft.etl.PcapCrypto.readSlice(blob, 0L, 24, keys(f0))
       finally blob.close()
     }.getOrElse(Array.emptyByteArray)

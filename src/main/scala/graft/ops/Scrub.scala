@@ -111,7 +111,7 @@ object Scrub {
       try {
         rows.foreach { r =>
           val f0 = r.getString(0); val pos = r.getLong(1); val len = r.getInt(2)
-          val f = if (f0.startsWith("file:")) new java.net.URI(f0).getPath else f0
+          val f = graft.etl.Pcap.localPath(f0)
           val hdr = hdrs.getOrElseUpdate(f, {
             val raf = new java.io.RandomAccessFile(f, "rw")
             open(f) = raf

@@ -6,7 +6,7 @@ package graft.query
   * SQL translation (DuckDB, via the driver's oracle) on the other. The
   * fixed-parameter endpoint queries pin one shape each; this sweeps the
   * parameter space — interval snapping at odd granularities, top-k
-  * tie-breaks at every k, the spigraph top-key semi-join under filters.
+  * tie-breaks at every k, the spigraph top-key join under filters.
   *
   * Unified output schema (both sides): (case_id BIGINT, k VARCHAR,
   * b BIGINT, n BIGINT) — term value as string ('' for histograms),

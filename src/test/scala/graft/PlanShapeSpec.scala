@@ -276,9 +276,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpecBase {
     // row order is the caller's decision (SparkEntry sorts each result);
     // an operator ending in orderBy would add a range shuffle and a sort
     // to every caller that re-aggregates, joins or caches its output
-    import org.apache.spark.sql.functions.{col, lit}
-    import graft.ops.{Dedup, Multimodal, Pack, Parliament, Sessionize,
-      Similarity}
+    import org.apache.spark.sql.functions.{col, lit, sum}
+    import graft.ops.{Dedup, Endpoints, Multimodal, Pack, Parliament,
+      Sessionize, Similarity}
     val s = spark
     import s.implicits._
     val docs = Seq((1L, "a b c d"), (2L, "a b c d"), (3L, "e f g h"))
@@ -292,6 +292,12 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpecBase {
         ("c2", 100L, 0L, 20L, 1L, 0L))
       .toDF("cluster", "currentTime", "deltaPacketsPerSec",
         "deltaBytesPerSec", "deltaTotalDroppedPerSec", "monitoring")
+    val links = Seq(("a", "b", 1L), ("b", "a", 2L), ("a", "c", 4000L))
+      .toDF("src", "dst", "t")
+      .withColumn("ts", col("t").cast("timestamp"))
+    val samples = Seq(("n1", 5L, 60L, 1000L, 500L), ("n2", 25L, 60L, 300L, 1000L))
+      .toDF("nodeName", "currentTime", "interval", "deltaBytes", "deltaMS")
+    val grid = Endpoints.dstats(samples, "deltaBitsPerSec", 0L, 40L, 10L)
     val ops = Seq(
       "Dedup.exact" -> (() => Dedup.exact(docs, col("text"), col("doc_id"))),
       "Dedup.simhash" -> (() =>
@@ -305,7 +311,31 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpecBase {
       "Sessionize.sessionize" -> (() => Sessionize.sessionize(events,
         col("user_id"), col("ts"), col("event_id"), 1800)),
       "Parliament.clusterRollup" -> (() =>
-        Parliament.clusterRollup(stats, nowSec = 1000000L)))
+        Parliament.clusterRollup(stats, nowSec = 1000000L)),
+      "Endpoints.timeHistogram" -> (() =>
+        Endpoints.timeHistogram(links, col("ts"), 60)),
+      "Endpoints.termCounts" -> (() =>
+        Endpoints.termCounts(links, col("src"), "src")),
+      "Endpoints.spigraph" -> (() =>
+        Endpoints.spigraph(links, col("src"), "src", col("ts"), 60, 1)),
+      "Endpoints.hierarchy" -> (() =>
+        Endpoints.hierarchy(links, Seq("src", "dst"), 1)),
+      "Endpoints.connectionsLinks" -> (() =>
+        Endpoints.connectionsLinks(links, col("src"), col("dst"),
+          Map("t" -> sum(col("t"))))),
+      "Endpoints.connectionsLinks minConn 2" -> (() =>
+        Endpoints.connectionsLinks(links, col("src"), col("dst"),
+          minConn = 2)),
+      "Endpoints.connectionsNodes" -> (() =>
+        Endpoints.connectionsNodes(links, Some(links), col("src"),
+          col("dst"))),
+      "Endpoints.spiview" -> (() =>
+        Endpoints.spiview(links, Seq("src", "dst"), 1)),
+      "Endpoints.nodeStats" -> (() => Endpoints.nodeStats(links, col("src"),
+        col("ts"), 60, Map("t" -> sum(col("t"))))),
+      "Endpoints.dstats" -> (() => grid),
+      "Endpoints.dstatsRollup" -> (() =>
+        Endpoints.dstatsRollup(grid, average = true)))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val sorted = ops.filter { case (_, op) =>
@@ -314,6 +344,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpecBase {
         }.nonEmpty
       }.map(_._1)
       assert(sorted.isEmpty, s"operators ending in a global sort: $sorted")
+      // the sorts that choose rows stay: a top-K cut is one TakeOrdered
+      assert(Endpoints.topTerms(links, col("src"), "src", 1)
+        .queryExecution.executedPlan.collect {
+          case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => t
+        }.size == 1)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
